@@ -189,6 +189,39 @@ class DiscogsReleasesSpec extends SparkSpec {
     assert(spark.read.parquet(outFile.getAbsolutePath).count() == 5)
   }
 
+  test("text edge cases and singleFile row order are pinned") {
+    // Surrounding whitespace in text and attributes is trimmed; an
+    // empty <genre> stays an empty string in the list; an empty
+    // <title> is an empty string, not null.
+    val edge = new File(tmpDir, "edge.xml")
+    Files.writeString(edge.toPath,
+      """<releases>
+        |<release id="21" status="Accepted"><title> x </title><artists><artist><id> 7 </id><name> N </name><anv> </anv><join></join></artist></artists><genres><genre></genre><genre> g </genre></genres><styles></styles><labels><label id=" 5 " catno=" C 1 " name=""/></labels></release>
+        |<release id="22" status="Draft"><title></title><artists></artists><genres></genres><styles></styles><labels></labels></release>
+        |</releases>""".stripMargin)
+    val rows = DiscogsReleases.transformReleases(
+      DiscogsReleases.read(spark, edge.getAbsolutePath))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    val r21 = rows(21)
+    assert(r21.getAs[String]("title") == "x")
+    val a = r21.getAs[scala.collection.Seq[Row]]("artists")
+    assert(a.map(x => (x.getAs[String]("id"), x.getAs[String]("name"),
+      x.getAs[String]("anv"), x.getAs[String]("join"))) ==
+      Seq(("7", "N", null, null)))
+    assert(r21.getAs[scala.collection.Seq[String]]("genres").toSeq == Seq("", "g"))
+    val l = r21.getAs[scala.collection.Seq[Row]]("labels")
+    assert(l.map(x => (x.getAs[String]("id"), x.getAs[String]("cat_no"),
+      x.getAs[String]("name"))) == Seq(("5", "C 1", "")))
+    assert(rows(22).getAs[String]("title") == "")
+    assert(rows(22).getAs[scala.collection.Seq[String]]("genres").isEmpty)
+
+    // singleFile output keeps the fixture's file order.
+    val outFile = new File(tmpDir, "releases_order.parquet")
+    DiscogsReleases.run(spark, gzPath, outFile.getAbsolutePath, singleFile = true)
+    assert(spark.read.parquet(outFile.getAbsolutePath).select("id")
+      .collect().map(_.getInt(0)).toSeq == Seq(1, 2, 5, 3, 4))
+  }
+
   test("rechunk fails loudly on a dump violating one-release-per-line") {
     val badGz = new File(tmpDir, "bad.xml.gz")
     val out = new java.util.zip.GZIPOutputStream(
