@@ -1,19 +1,22 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 
 /** Discogs `releases` XML (gzipped) → Snappy Parquet — the whole
   * reference program (`/root/reference/src/main.rs`), re-expressed
   * Spark-first.
   *
-  * The reference's 931 LoC of hand-rolled pull parsing, grammar
-  * validation, columnar builders and batched Parquet writing collapse
-  * to: one declared read schema (ReleaseSchema.xmlSchema), one
-  * `spark.read.format("xml")`, one projection, one
-  * `write.parquet` — Catalyst and the Parquet writer supply the
-  * column pruning, batching, dictionary encoding and Snappy
-  * compression the reference implements manually (SURVEY.md §4).
+  * The reference's 931 LoC collapse to: `spark.read.textFile` over the
+  * one-release-per-line dump, one StAX pull parser per partition
+  * ([[ReleaseParser]], the reference's own streaming design: dispatch
+  * on tag name, skip the discarded subtrees in the same pass, fail on
+  * unknown content) emitting rows of [[ReleaseSchema.xmlSchema]], one
+  * projection, one `write.parquet` — the Parquet writer supplies the
+  * batching, dictionary encoding and Snappy compression the reference
+  * implements manually (SURVEY.md §4).
   *
   * Semantics replicated exactly (pinned by DiscogsReleasesSpec):
   *  - `catno` attr → `cat_no` column (`main.rs:649-653` vs `181`)
@@ -28,9 +31,9 @@ import org.apache.spark.sql.functions._
   *
   * Known deviation (documented, not copied): the reference manually
   * unescapes ONLY `&amp;` in genre/style text (`main.rs:596`, `619`),
-  * so `&lt;` etc. would pass through escaped. Spark's XML reader
-  * unescapes all standard entities. For `&amp;` — the only entity in
-  * real Discogs genre/style values — behavior is identical.
+  * so `&lt;` etc. would pass through escaped. The StAX reader unescapes
+  * all standard entities. For `&amp;` — the only entity in real
+  * Discogs genre/style values — behavior is identical.
   *
   * Scale: one `.xml.gz` is non-splittable (one task — same
   * sequential bound as the reference). At 100 TB you'd ingest many
@@ -42,29 +45,37 @@ object DiscogsReleases {
 
   private def emptyArr(tpe: String): Column = array().cast(s"array<$tpe>")
 
-  /** Read the raw XML with the declared schema (FAILFAST: malformed
-    * content errors out rather than yielding silent nulls — the
-    * Spark equivalent of the reference's panic-on-unexpected,
-    * SURVEY S3/S5/S6).
+  /** Parse the dump into rows of [[ReleaseSchema.xmlSchema]]: the lines
+    * of `input` (`spark.read.text`; gzip is transparent, one task per
+    * `.gz` file) streamed through one [[ReleaseParser]] per partition. A line that is neither
+    * a document frame nor one whole release, a malformed value or
+    * unknown content fails the task with a message naming the release
+    * id (or the line) — the reference's panic-on-unexpected, SURVEY
+    * S3/S5/S6.
     */
-  def read(spark: SparkSession, input: String): DataFrame =
-    spark.read
-      .format("xml")
-      .option("rowTag", "release")
-      .option("attributePrefix", "_")
-      .option("valueTag", "_VALUE")
-      .option("mode", "FAILFAST")
-      .schema(ReleaseSchema.xmlSchema)
-      .load(input)
+  def read(spark: SparkSession, input: String): DataFrame = {
+    val schema = ReleaseSchema.xmlSchema
+    // Rows reach catalyst through Spark's interpreted converter, not a
+    // generated row encoder. Spark keys generated classes by session
+    // class loader, so every new session would compile the encoder of
+    // this nested schema again (~0.1 s per session); and fused into a
+    // whole-stage method it is past HotSpot's 8 KB JIT limit.
+    val rows = spark.read.text(input).queryExecution.toRdd.mapPartitions { lines =>
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      new ReleaseParser(lines.map(_.getUTF8String(0).toString))
+        .map(toCatalyst(_).asInstanceOf[InternalRow])
+    }
+    GraftBridge.internalCreateDataFrame(spark, rows, schema)
+  }
 
   /** The single projection that produces the reference's output
     * schema: attribute casts, nested renames via `transform`, the
     * master_id flattening, and empty-list defaults.
     */
   def transformReleases(raw: DataFrame): DataFrame = {
-    // Spark's XML source yields "" for an empty element; the reference
-    // pushes null for empty <anv>/<join> (main.rs:718-741) — nullif
-    // restores that rule exactly.
+    // The parser yields "" for an empty element; the reference pushes
+    // null for empty <anv>/<join> (main.rs:718-741) — nullif restores
+    // that rule exactly.
     val artists = coalesce(
       transform(col("artists.artist"), a =>
         struct(
@@ -104,98 +115,20 @@ object DiscogsReleases {
     require(n == 0, s"$n release rows violate the reference's invariants")
   }
 
-  /** Per-element strictness spec for [[validateNoUnknownContent]]:
-    * which children/attributes an element may carry (`children`),
-    * which subtrees are read-and-discarded like the reference does
-    * (`skip`), and whether unknown attributes are silently ignored
-    * (`allowAnyAttrs` — the reference does this ONLY for `<label>`,
-    * `main.rs:662`).
+  /** Strict unknown-content check: a parse-only pass over `input`.
+    * The parser already fails on content the reference's grammar does
+    * not know (see [[ReleaseParser]]), so this runs it without writing
+    * anything and rethrows its `IllegalArgumentException`, which names
+    * the release id and the unknown path.
     */
-  private final case class Strict(
-      children: Map[String, Strict] = Map.empty,
-      skip: Set[String] = Set.empty,
-      allowAnyAttrs: Boolean = false)
-
-  /** The reference's grammar as a strictness tree: panics on unknown
-    * release attributes (`main.rs:496-500`), unknown release children
-    * (`549-554`), unknown artist children (`750-753`) and unknown
-    * master_id attributes (`826-836`); discards `role`/`tracks` inside
-    * artists (`742-749`) and the nine release-level skip-subtrees
-    * (`758-917`); ignores unknown label attributes (`662`).
-    */
-  private val releaseStrict: Strict = Strict(
-    children = Map(
-      "_id" -> Strict(),
-      "_status" -> Strict(),
-      "title" -> Strict(),
-      "artists" -> Strict(children = Map("artist" -> Strict(
-        children = Map("id" -> Strict(), "name" -> Strict(),
-          "anv" -> Strict(), "join" -> Strict()),
-        skip = Set("role", "tracks")))),
-      "genres" -> Strict(children = Map("genre" -> Strict())),
-      "styles" -> Strict(children = Map("style" -> Strict())),
-      "labels" -> Strict(children = Map("label" -> Strict(allowAnyAttrs = true))),
-      "master_id" -> Strict(children = Map("_is_main_release" -> Strict()))),
-    skip = Set( // main.rs:758-917 + per-release extras
-      "images", "extraartists", "formats", "country", "data_quality",
-      "tracklist", "videos", "released", "companies", "notes",
-      "identifiers"))
-
-  /** Unwrap arrays: repeated children infer as array<struct>, single
-    * occurrences as struct — strictness cares only about the element
-    * shape.
-    */
-  private def elementType(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
-    t match {
-      case org.apache.spark.sql.types.ArrayType(e, _) => elementType(e)
-      case other => other
+  def validateNoUnknownContent(spark: SparkSession, input: String): Unit =
+    try read(spark, input).count()
+    catch {
+      case e: SparkException =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case c: IllegalArgumentException => c }
+          .getOrElse(e)
     }
-
-  /** All undeclared field paths in an inferred schema subtree.
-    * Non-struct inferred types are leaves (plain text content — no
-    * unknown structure inside); `_VALUE` is the XML source's text
-    * carrier, allowed anywhere.
-    */
-  private def unknownPaths(
-      t: org.apache.spark.sql.types.DataType,
-      spec: Strict,
-      path: String): Seq[String] =
-    elementType(t) match {
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fields.toSeq.flatMap { f =>
-          val p = if (path.isEmpty) f.name else s"$path.${f.name}"
-          if (f.name == "_VALUE" || spec.skip.contains(f.name)) Nil
-          else if (spec.allowAnyAttrs && f.name.startsWith("_")) Nil
-          else spec.children.get(f.name) match {
-            case Some(child) => unknownPaths(f.dataType, child, p)
-            case None => Seq(p)
-          }
-        }
-      case _ => Nil
-    }
-
-  /** Strict unknown-content check — the dataset-level equivalent of
-    * the reference's panics on unknown attributes/elements at EVERY
-    * level of the grammar (see [[releaseStrict]] for the file:line
-    * map). The declarative read silently prunes undeclared fields, so
-    * strict mode re-infers the full nested schema from the data and
-    * diffs it recursively against the declared+skip tree — unknown
-    * content inside `<artist>`, `<master_id>` etc. is caught, not just
-    * top-level. Costs one extra scan; opt-in, exactly like the
-    * reference's always-on strictness is a design choice.
-    */
-  def validateNoUnknownContent(spark: SparkSession, input: String): Unit = {
-    val inferred = spark.read
-      .format("xml")
-      .option("rowTag", "release")
-      .option("attributePrefix", "_")
-      .option("valueTag", "_VALUE")
-      .load(input)
-      .schema
-    val unknown = unknownPaths(inferred, releaseStrict, "")
-    require(unknown.isEmpty,
-      s"unknown release content (reference would panic): ${unknown.mkString(", ")}")
-  }
 
   /** Convert `input` XML to a snappy-parquet directory at `output`.
     *
@@ -235,9 +168,7 @@ object DiscogsReleases {
         val t = l.trim
         if (t.startsWith("<release ")) Some(l)
         else {
-          val frame = t.isEmpty || t == "<releases>" || t == "</releases>" ||
-            t.startsWith("<?xml")
-          if (!frame && unexpected.value.size() < 10) unexpected.add(t.take(120))
+          if (!ReleaseParser.isFrameLine(t) && unexpected.value.size() < 10) unexpected.add(t.take(120))
           None
         }
       }

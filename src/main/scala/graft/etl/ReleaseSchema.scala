@@ -6,16 +6,16 @@ import org.apache.spark.sql.types._
   *
   * Mirrors the reference's hard-coded Arrow schema
   * (`/root/reference/src/main.rs:179-217`) — see SURVEY.md §1.2 for
-  * the full type mapping. Two schemas exist because Spark's XML
-  * source sees attributes as `_`-prefixed fields and wraps repeated
-  * child elements in their container element.
+  * the full type mapping. Two schemas exist because the parsed rows
+  * keep the XML's shape — attributes as `_`-prefixed fields, repeated
+  * child elements wrapped in their container element — and one
+  * projection turns them into the output.
   */
 object ReleaseSchema {
 
   /** Artist child fields we keep. `role`/`tracks` are intentionally
     * absent: the reference reads and discards them
-    * (`main.rs:742-749`); omitting them from the read schema makes the
-    * XML source never materialize them (column pruning, SURVEY S13).
+    * (`main.rs:742-749`), and so does [[ReleaseParser]] (SURVEY S13).
     */
   val artistXml: StructType = StructType(Seq(
     StructField("id", StringType, nullable = true),
@@ -24,21 +24,23 @@ object ReleaseSchema {
     StructField("join", StringType, nullable = true)))
 
   /** Label: attribute-only empty elements (`main.rs:626-668`).
-    * Unknown attributes are silently ignored by schema omission —
-    * matching the reference (`main.rs:662`).
+    * The parser ignores unknown label attributes — matching the
+    * reference (`main.rs:662`).
     */
   val labelXml: StructType = StructType(Seq(
     StructField("_id", StringType, nullable = true),
     StructField("_catno", StringType, nullable = true),
     StructField("_name", StringType, nullable = true)))
 
-  /** Read-side schema for `spark.read.format("xml")` with
-    * `rowTag=release`, `attributePrefix=_`, `valueTag=_VALUE`.
+  /** The rows [[ReleaseParser]] emits and `DiscogsReleases.read`
+    * returns, in the XML's shape: attributes as `_`-prefixed fields,
+    * list items inside their container struct, the `<master_id>` text
+    * as `_VALUE`.
     *
     * The nine skip-subtrees of the reference (`main.rs:758-917`:
     * images, extraartists, formats, country, data_quality, tracklist,
-    * videos, released, companies, notes, identifiers) are simply not
-    * declared — the source prunes them for free.
+    * videos, released, companies, notes, identifiers) have no field:
+    * the parser skips them without building anything.
     */
   val xmlSchema: StructType = StructType(Seq(
     StructField("_id", LongType, nullable = true), // u32-safe; cast to int on output
