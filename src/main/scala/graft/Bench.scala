@@ -3,19 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size(null) = null (not -1), matching the DuckDB oracle's NULL
-      // semantics should null text ever reach a size().
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     // Same warn-and-continue data-contract preflight as Verify: a
     // testdata drift should be named here, not inferred from a wall of
     // BENCH FAIL lines.
@@ -131,7 +119,7 @@ object Bench {
     // honored above. "cpus" is the env contract as parsed;
     // "parallelism" is what the scheduler actually resolved it to.
     val cpusField =
-      s""","cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism}"""
+      s""","cpus":${GraftSession.cpus},"parallelism":${spark.sparkContext.defaultParallelism}"""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"failed":$failed$filterField$cpusField,"sf":"$sfDir"}"""
     println(line)

@@ -17,9 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class Engine(val spark: SparkSession, dir: String) {
 
   Tables.registerAll(spark, dir)
-  functions.VectorExpressions.register(spark)
-  functions.Winnow.register(spark)
-  functions.Simhash.register(spark)
+  GraftSession.install(spark)
 
   /** Ad-hoc SQL over the registered tables. */
   def sql(q: String): DataFrame = spark.sql(q)

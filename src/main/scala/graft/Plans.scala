@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -15,7 +14,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * so the final frame's explain alone would miss the real work).
   *
   * Usage: runMain graft.Plans <outDir> <nameFilter>[,term...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (see
+  * [[GraftSession.cpus]]).
   * Never invoked by the driver; changes nothing about Bench's contract.
   */
 object Plans {
@@ -23,18 +23,8 @@ object Plans {
     val outDir = args(0)
     val filterTerms = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
 
     val seq = new AtomicInteger(0)
     @volatile var current = "warmup"

@@ -188,7 +188,6 @@ object ScaleSmoke {
     */
   def runSim(spark: SparkSession, factor: Int): Unit = {
     import graft.ops.Similarity
-    graft.functions.VectorExpressions.register(spark)
     val emb1 = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1060,7 +1059,6 @@ object ScaleSmoke {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.expressions.Window
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
     val S = ops.Similarity
     val e = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
       .filter(col("embedding").isNotNull)
@@ -1632,15 +1630,7 @@ object ScaleSmoke {
         case "incpr" => 5
         case _ => 4
       })
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
 
     if (mode == "skew") { runSkew(spark, factor); spark.stop(); return }
     if (mode == "q56") { runQ56(spark, factor); spark.stop(); return }
@@ -1722,7 +1712,6 @@ object ScaleSmoke {
     // corpus under 4 and 8 bucket bits — the 8-bit run should not be
     // slower (it trades recall for candidate count).
     import graft.ops.Similarity
-    graft.functions.VectorExpressions.register(spark)
     val emb1 = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))

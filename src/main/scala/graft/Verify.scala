@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,19 +14,7 @@ object Verify {
     // semantics (the driver always calls with 2 args → full run).
     val filterTerms = args.lift(2).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.load.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size(null) = null (not -1), matching the oracle's NULL semantics.
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     // Data-contract preflight: name any testdata drift up front (round
     // 9's ts-layout change cost 18 queries before being diagnosed).

@@ -5,8 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev benchmark for the XML→Parquet pipeline: generates a synthetic
   * releases dump (deterministic, reference-shaped) and times the job.
   *
@@ -55,13 +53,7 @@ object EtlBench {
     genXml(xml, n)
     val tGen = (System.nanoTime() - t0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     // warm codegen/JIT on a small prefix
     DiscogsReleases.run(spark, xml, s"$tmp/warm")
 

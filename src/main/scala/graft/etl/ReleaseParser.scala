@@ -239,8 +239,8 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
 
 private[etl] object ReleaseParser {
 
-  /** The release-level subtrees the reference reads and discards
-    * (`main.rs:758-917`), plus the per-release extras of real dumps.
+  /** The eleven release-level subtrees the reference reads and
+    * discards (`main.rs:758-917`; listed in [[ReleaseSchema.xmlSchema]]).
     */
   private val skipped: Set[String] = Set(
     "images", "extraartists", "formats", "country", "data_quality",

@@ -37,10 +37,15 @@ object ReleaseSchema {
     * list items inside their container struct, the `<master_id>` text
     * as `_VALUE`.
     *
-    * The nine skip-subtrees of the reference (`main.rs:758-917`:
-    * images, extraartists, formats, country, data_quality, tracklist,
-    * videos, released, companies, notes, identifiers) have no field:
-    * the parser skips them without building anything.
+    * The eleven skip-subtrees have no field: the parser skips them
+    * without building anything. All eleven are the reference's own,
+    * none is an extra of real dumps: its release dispatch knows 17
+    * children (`main.rs:506-565`), these eleven plus the six
+    * fields below, and it has one discarding parser for each (`main.rs`
+    * lines): images 758-769, extraartists 771-780, formats 782-791,
+    * country 793-802, data_quality 804-813, tracklist 853-862, videos
+    * 864-873, released 875-884, companies 886-895, notes 897-906,
+    * identifiers 908-917.
     */
   val xmlSchema: StructType = StructType(Seq(
     StructField("_id", LongType, nullable = true), // u32-safe; cast to int on output

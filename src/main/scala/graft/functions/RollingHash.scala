@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -156,21 +156,12 @@ object RollingFingerprints {
   }
 }
 
+/** Column form of `graft_rolling_fp`; the session must carry graft's
+  * table ([[graft.GraftSession]]).
+  */
 object RollingHash {
 
-  /** Idempotently register graft_rolling_fp on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_fp",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bin, len) => RollingFingerprints(bin,
-          len.eval().asInstanceOf[Number].intValue())
-        case other => throw new IllegalArgumentException(
-          s"graft_rolling_fp(binary, minLen): got ${other.size} args")
-      },
-      "built-in")
-
-  /** Window fingerprints of a binary column (requires `register`). */
+  /** Window fingerprints of a binary column. */
   def fingerprints(bin: Column, minLen: Int): Column =
     call_function("graft_rolling_fp", bin,
       org.apache.spark.sql.functions.lit(minLen))

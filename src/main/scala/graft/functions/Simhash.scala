@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -166,29 +166,14 @@ object Simhash64Xx {
   }
 }
 
+/** Column forms of graft's SimHash functions; the session must carry
+  * graft's table ([[graft.GraftSession]]).
+  */
 object Simhash {
 
-  /** Idempotently register graft_simhash60 + graft_simhash64 on a
-    * session.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash60",
-      (exprs: Seq[Expression]) => Simhash60Md5(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64",
-      (exprs: Seq[Expression]) => Simhash64Xx(exprs.head),
-      "built-in")
-  }
-
-  /** Native 60-bit SimHash of a token-array column (requires
-    * `register`).
-    */
+  /** Native 60-bit SimHash of a token-array column. */
   def simhash60(toks: Column): Column = call_function("graft_simhash60", toks)
 
-  /** Native 64-bit xxhash SimHash of a token-array column (requires
-    * `register`).
-    */
+  /** Native 64-bit xxhash SimHash of a token-array column. */
   def simhash64(toks: Column): Column = call_function("graft_simhash64", toks)
 }

@@ -80,8 +80,8 @@ object TextFunctions {
     *
     * Classic scheme: per bit position, sum +1/-1 over token hashes,
     * then take the sign bit. Dispatches to the native [[Simhash64Xx]]
-    * expression (callers must `Simhash.register(spark)`); the HOF
-    * form below is the executable spec DedupSpec pins it against.
+    * expression (the session must carry graft's table,
+    * [[graft.GraftSession]]); the HOF form below is the executable spec DedupSpec pins it against.
     */
   def simhash64(toksCol: String): Column =
     Simhash.simhash64(org.apache.spark.sql.functions.col(toksCol))
@@ -115,8 +115,9 @@ object TextFunctions {
     * Dispatches to the native [[Simhash60Md5]] expression (one md5 +
     * counter loop per token inside codegen; the HOF form below is
     * interpreted at ~60 boxed ops per token and was the dominant cost
-    * of d04/d11/st07). Callers must `Simhash.register(spark)`;
-    * equivalence with the HOF is pinned by DedupSpec.
+    * of d04/d11/st07). The session must carry graft's table
+    * ([[graft.GraftSession]]); equivalence with the HOF is pinned by
+    * DedupSpec.
     */
   def simhash60Md5(toksCol: String): Column =
     Simhash.simhash60(org.apache.spark.sql.functions.col(toksCol))

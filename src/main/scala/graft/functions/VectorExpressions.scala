@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -209,35 +209,18 @@ case class OuterProduct(child: Expression)
       newChild: Expression): Expression = copy(child = newChild)
 }
 
+/** Column forms of graft's vector functions; the session must carry
+  * graft's table ([[graft.GraftSession]]).
+  */
 object VectorExpressions {
 
-  /** Idempotently register graft's native expressions on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq8dist",
-      (exprs: Seq[Expression]) => Sq8Dist(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_outer",
-      (exprs: Seq[Expression]) => OuterProduct(exprs(0)),
-      "built-in")
-  }
-
-  /** Dot product of two array<double> columns (requires `register`). */
+  /** Dot product of two array<double> columns. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** SQ8 integer distance of two array<int> code columns (requires
-    * `register`).
-    */
+  /** SQ8 integer distance of two array<int> code columns. */
   def sq8dist(a: Column, b: Column): Column =
     call_function("graft_sq8dist", a, b)
 
-  /** Row-major self outer product of an array<double> column
-    * (requires `register`).
-    */
+  /** Row-major self outer product of an array<double> column. */
   def outer(a: Column): Column = call_function("graft_outer", a)
 }

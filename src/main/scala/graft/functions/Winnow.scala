@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -134,17 +134,11 @@ object WinnowFingerprints {
   }
 }
 
+/** Column form of `graft_winnow`; the session must carry graft's
+  * table ([[graft.GraftSession]]).
+  */
 object Winnow {
 
-  /** Idempotently register graft_winnow on a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      (exprs: Seq[Expression]) => WinnowFingerprints(exprs.head),
-      "built-in")
-
-  /** Winnowing fingerprint set of a binary column (requires
-    * `register`).
-    */
+  /** Winnowing fingerprint set of a binary column. */
   def fingerprints(bin: Column): Column = call_function("graft_winnow", bin)
 }

@@ -693,7 +693,6 @@ object Dedup {
     * cosine) for candidate pairs with cosine > `minCosine`.
     */
   def embeddingNearDupByBucket(e: DataFrame, minCosine: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(e.sparkSession)
     val withNorm = e
       .withColumn("nrm",
         sqrt(graft.functions.VectorExpressions.dot(col("v"), col("v"))))
@@ -737,7 +736,6 @@ object Dedup {
       maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3,
       s"4-band blocking is exact only for Hamming <= 3, got $maxHamming")
-    graft.functions.Simhash.register(documents.sparkSession)
     val sig = documents
       .filter(col("text").isNotNull)
       .repartition(
@@ -780,7 +778,6 @@ object Dedup {
     * scale path).
     */
   def simhashes(documents: DataFrame): DataFrame = {
-    graft.functions.Simhash.register(documents.sparkSession)
     documents
       .repartition(documents.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("toks", tokens(col("text")))
@@ -954,7 +951,6 @@ object Dedup {
         // native Simhash60Md5 expression (one codegen call per doc).
         // (The xxhash64 variant, `simhashes`, is the cheaper scale
         // path, pinned by DedupSpec.)
-        graft.functions.Simhash.register(s)
         docs(s, dir)
           // NULL-text gate on BOTH sides: the null-intolerant native
           // expression yields NULL where the oracle's COALESCE would
@@ -1144,7 +1140,6 @@ object Dedup {
         // expression sums in index order — bit-identical to the DuckDB
         // oracle. Norms are precomputed per vector (N rows) instead of
         // per pair (N²/blocks rows).
-        graft.functions.VectorExpressions.register(s)
         val dot = (a: Column, b: Column) =>
           graft.functions.VectorExpressions.dot(a, b)
         val e = Tables.load(s, dir, "embeddings")
@@ -1187,7 +1182,6 @@ object Dedup {
         // label-mate pairs). Fully oracle-checked — the md5-parity
         // planes and index-order double dot products reproduce
         // bit-for-bit in DuckDB.
-        graft.functions.VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1236,7 +1230,6 @@ object Dedup {
         // seed means, index-order cosine folds, rank tie-breaks) is
         // bit-reproducible in DuckDB, so keep/drop decisions hash-
         // match exactly — no tolerance band.
-        graft.functions.VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1298,7 +1291,6 @@ object Dedup {
         // sub-block split is md5-parity-deterministic, so the BLOCKED
         // semantics themselves hash-check — including exactly which
         // borderline neighbors the blocking forgoes vs d12.
-        graft.functions.VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -2102,7 +2094,6 @@ object Dedup {
   def exactSubstringDedupFast(documents: DataFrame,
       minLen: Int = 40): DataFrame = {
     val s = documents.sparkSession
-    graft.functions.RollingHash.register(s)
     val d = docFrame(documents)
     val grams = d.filter(col("len") >= minLen)
       .select(col("doc_id"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AsOfJoinPlan, GraftStrategies}
+import graft.plans.AsOfJoinPlan
 
 /** Join utilities for skew at scale.
   *
@@ -45,21 +45,14 @@ object Joins {
     * key (nulls when none). Column names must not collide across the
     * two sides — rename before joining (as-of output keeps both).
     *
-    * Registers the planner strategy imperatively
-    * (`spark.experimental.extraStrategies`) so the operator works in
-    * any session, with `GraftExtensions` as the conf-driven
-    * alternative.
+    * Planned by [[graft.plans.GraftStrategies]], so the session must
+    * carry graft's table ([[graft.GraftSession]]).
     */
   def asofJoinNative(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String): DataFrame = {
     val spark = left.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
-    }
     val lPlan = left.queryExecution.analyzed
     // Re-alias every right column: a self-join's two sides share
     // attribute ids from the same scan, and a plan node whose output

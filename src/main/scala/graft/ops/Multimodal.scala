@@ -147,7 +147,6 @@ object Multimodal {
   private[graft] def decodeDocs(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     documents
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
       .filter(col("payload").isNotNull)

@@ -56,7 +56,6 @@ object Pipeline {
         // query vector. One declarative plan across both modalities;
         // the doc table never ships its text past the gate (projection
         // pruning), the embedding side shuffles only gated ids.
-        graft.functions.VectorExpressions.register(s)
         val dot = (a: Column, b: Column) =>
           graft.functions.VectorExpressions.dot(a, b)
         val gated = Tables.load(s, dir, "documents")

@@ -26,7 +26,6 @@ import graft.functions.VectorExpressions
 object Similarity {
 
   private[graft] def emb(s: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(s)
     Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -2345,7 +2344,6 @@ object Similarity {
       lam: Double, mu: Double): DataFrame = {
     val s = e0.sparkSession
     import s.implicits._
-    VectorExpressions.register(s)
     val e = e0.filter(col("v").isNotNull)
     def cvLit(vs: Seq[Double]): Column = array(vs.map(lit): _*)
     val q = e.filter(col("vec_id") === 0L).select(col("v").as("qv"))
@@ -4412,7 +4410,6 @@ object Similarity {
   def abttTopk(e: DataFrame, k: Int, nq: Int, dims: Int = 64,
       iters: Int = 20): DataFrame = {
     val s = e.sparkSession
-    VectorExpressions.register(s)
     val rows = e.filter(col("v").isNotNull)
     val n = rows.count()
     val (m, v1) =
@@ -4517,7 +4514,6 @@ object Similarity {
   def pcaProject(e: DataFrame, dims: Int = 64,
       iters: Int = 20): DataFrame = {
     val s = e.sparkSession
-    VectorExpressions.register(s) // graft_dot for direct callers
     import s.implicits._
     val rows = e.filter(col("v").isNotNull)
     val n = rows.count()

@@ -1444,7 +1444,6 @@ object TextAnalysis {
         // cheaper and is what survives 100 TB.) The CW-mixed byte-gram
         // hash reproduces bit-for-bit in the DuckDB oracle via
         // hex-slice arithmetic — see WinnowFingerprints' contract.
-        graft.functions.Winnow.register(s)
         val fps = graft.functions.Winnow.fingerprints(
           encode(lower(col("text")), "UTF-8"))
         docs(s, dir)

@@ -21,7 +21,10 @@
   *  - [[graft.streaming]] — Structured Streaming: unified batch/stream
   *    windows, stateful ops, stream-stream joins, streaming dedup.
   *  - [[graft.Engine]] — the user-facing facade;
-  *    [[graft.GraftExtensions]] — `spark.sql.extensions` entry point.
+  *    [[graft.GraftSession]] — the session contract: one session
+  *    builder, and the one table of native functions, planner strategy
+  *    and optimizer rule, installed through [[graft.GraftExtensions]]
+  *    (`spark.sql.extensions`) or `GraftSession.install`.
   *  - [[graft.SparkEntry]] / [[graft.Verify]] / [[graft.Bench]] — the
   *    driver contract (flagship query, correctness dump, benchmark).
   */

@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 /** Native backward as-of join — the whole-operator tier (c) of the
   * custom-operator ladder: a `LogicalPlan` node, a planner `Strategy`
-  * ([[GraftStrategies]]) and a physical [[AsOfJoinExec]], registered
-  * through `SparkSessionExtensions` ([[graft.GraftExtensions]]).
+  * ([[GraftStrategies]]) and a physical [[AsOfJoinExec]], installed
+  * with the rest of graft's table ([[graft.GraftSession]]).
   *
   * Semantics (matching the composed union+window form in
   * `Relational2.asofJoin`, and the reference convention): for every

@@ -3,10 +3,9 @@ package graft.plans
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Planner strategy for graft's custom logical operators — injected
-  * via `SparkSessionExtensions.injectPlannerStrategy`
-  * ([[graft.GraftExtensions]]). One pattern per operator; everything
-  * else falls through to Spark's built-in strategies.
+/** Planner strategy for graft's custom logical operators — part of
+  * graft's table ([[graft.GraftSession]]). One pattern per operator;
+  * everything else falls through to Spark's built-in strategies.
   */
 object GraftStrategies extends SparkStrategy {
 

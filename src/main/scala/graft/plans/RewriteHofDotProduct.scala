@@ -26,7 +26,7 @@ import graft.functions.DotProduct
   * case — the two are bit-identical (same index-order accumulation)
   * and the guard folds to a cheap pair of cached array-length reads.
   *
-  * Injected by [[graft.GraftExtensions]]; written as a
+  * Part of graft's table ([[graft.GraftSession]]); written as a
   * `Rule[LogicalPlan]` over `transformAllExpressions`, the (c)-tier
   * extension point of SURVEY §2's custom-operator ladder.
   */

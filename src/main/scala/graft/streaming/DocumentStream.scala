@@ -62,7 +62,6 @@ object DocumentStream {
     * `Dedup.simhashNearDup`'s banding.
     */
   def bandedSignatures(documents: DataFrame): DataFrame = {
-    graft.functions.Simhash.register(documents.sparkSession)
     documents
       .filter(col("text").isNotNull)
       .withColumn("toks", tokens(col("text")))

@@ -144,7 +144,6 @@ object EmbeddingStream {
     val cand = pairs.select("vec_a", "vec_b").distinct()
     val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       graft.functions.VectorExpressions.dot(a, b)
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -322,7 +321,6 @@ object EmbeddingStream {
   private[streaming] def maintainIndexFrames(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val S = graft.ops.Similarity
     val e = graft.Tables.load(spark, dir, "embeddings")
       .filter(col("embedding").isNotNull)
@@ -482,7 +480,6 @@ object EmbeddingStream {
     */
   def runDriftMonitor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val S = graft.ops.Similarity
     val e = graft.Tables.load(spark, dir, "embeddings")
       .filter(col("embedding").isNotNull)

@@ -96,7 +96,6 @@ class DedupSpec extends SparkSpec {
     } ++ (0 until 6).map(i =>
       (800L + i, (1 to 60).map(j => s"iso${i}q$j").mkString(" ")))
     val df = rows.toDF("doc_id", "text")
-    graft.functions.Simhash.register(spark)
     val sigs = df
       .withColumn("toks", TextFunctions.tokens(col("text")))
       .select(col("doc_id"), TextFunctions.simhash60Md5("toks").as("s"))
@@ -144,7 +143,6 @@ class DedupSpec extends SparkSpec {
   test("property: native simhash60 ≡ HOF on random unicode token arrays") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.Simhash.register(spark)
     // Random token lists over a unicode-heavy alphabet (multi-byte
     // UTF-8 exercises the md5-input encoding), sizes 0..40 including
     // the empty array.
@@ -176,7 +174,6 @@ class DedupSpec extends SparkSpec {
   test("native simhash60 expression is bit-identical to the HOF form") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.Simhash.register(spark)
     // Fixture + edge cases: empty text (empty token array → all-ones
     // by the zero-counter convention) and a 1-token doc.
     val df = (Seq((0L, ""), (1L, "solo")) ++

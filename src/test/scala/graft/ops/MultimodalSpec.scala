@@ -9,7 +9,6 @@ class MultimodalSpec extends SparkSpec {
   test("m05: same-size blocking pairs docs; exact payload clones flag is_dup") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("m05spec").toFile
     try {
       Seq(
@@ -44,7 +43,6 @@ class MultimodalSpec extends SparkSpec {
   test("m06: per-source card counts volume, formats, exact dups and near-dups") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("m06spec").toFile
     try {
       // srcA: an exact clone pair (dup_docs=1, both near-dup) + one
@@ -94,7 +92,6 @@ class MultimodalSpec extends SparkSpec {
   test("m07: perceptual blocking needs no byte-length match; only true clones emit") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("m07spec").toFile
     try {
       Seq(
@@ -132,7 +129,6 @@ class MultimodalSpec extends SparkSpec {
   test("m07 multi-probe: Hamming-1 sign pairs collide exactly once; Hamming-2 never") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // Hand-built decoded frame, all in ONE format block (64×64):
     //   10 ↔ 11: identical signs (Hamming 0)
     //   10 ↔ 12: one near-boundary sign flipped (Hamming 1) — the
@@ -172,7 +168,6 @@ class MultimodalSpec extends SparkSpec {
       "zero-feature blobs are kept singletons") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val base = Array.fill(8)(0.5)
     val flip1 = base.updated(7, -0.5) // Hamming 1 but cos 0.75 < 0.999
     val dec = Seq(
@@ -202,7 +197,6 @@ class MultimodalSpec extends SparkSpec {
       "low-cosine survive, eval docs ungraded") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // ε-feature trick: flipping feature 0 between +0.001 and -0.001
     // flips one sign bit while keeping cosine ≈ 1 (> 0.999) — the
     // re-encode-near-boundary case the flip-1 probe must recover.
@@ -238,7 +232,6 @@ class MultimodalSpec extends SparkSpec {
   test("m10 admission: verdicts fire per gate with stated precedence") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val pos = Seq.fill(8)(0.5) // sig 255
     val neg = Seq.fill(8)(-0.5) // sig 0 — Hamming 8 from pos
     val alt = Seq(0.5, -0.5, 0.5, -0.5, 0.5, -0.5, 0.5, -0.5)

@@ -600,7 +600,6 @@ class PlanSpec extends SparkSpec {
     // level-3 fold; (c) EVERY chunked-mean level partially aggregates
     // before its exchange, so the shuffles carry bounded chunk
     // buffers / chunk sums, never raw member rows.
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         org.apache.spark.sql.functions.transform(

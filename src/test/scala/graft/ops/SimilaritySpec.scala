@@ -7,7 +7,6 @@ class SimilaritySpec extends SparkSpec {
   test("brute-force cosine top-k ranks the aligned vector first") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val df = Seq(
       (0L, 0, Seq(1f, 0f, 0f, 0f)),
       (1L, 0, Seq(0.9f, 0.1f, 0f, 0f)), // nearly aligned with 0
@@ -46,7 +45,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // 3 tight clusters around near-orthogonal directions in R^64.
     def base(c: Int): Seq[Double] =
       (0 until 64).map(d => if (d / 8 == c) 1.0 else 0.01)
@@ -79,7 +77,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     def pat(k: Int): Seq[Double] =
       (0 until 16).map(d => if (d == k) 1.0 else 0.05)
     val (a, b, c, d) = (pat(0), pat(3), pat(7), pat(11))
@@ -112,7 +109,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // Query 0 and two docs in the SAME orthant (identical sign bits,
     // Hamming 0 to the query for both): doc 5 is magnitude-skewed
     // (lower cosine), doc 10 is nearly aligned. The Hamming layer must
@@ -141,7 +137,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // Doc 5 is the query SCALED ×5: cosine exactly 1.0 but L2-far, so
     // the SQ8 integer stage must rank it behind the L2-near doc 10 —
     // the inversion only the full-precision refine can fix.
@@ -181,7 +176,6 @@ class SimilaritySpec extends SparkSpec {
         (0 until 9).map(i => (200L + i, 1, jitter(b, i))) ++
         Seq((101L, 0, jitter(b, 1))) // true B, labeled A
     val e = rows.toDF("vec_id", "label", "v")
-    graft.functions.VectorExpressions.register(spark)
     val out = Similarity.kmeansIterate(e).collect()
     val members = out.map(r => r.getInt(0) -> r.getLong(2)).toMap
     assert(members == Map(0 -> 10L, 1 -> 10L), s"members: $members")
@@ -209,7 +203,6 @@ class SimilaritySpec extends SparkSpec {
         (0 until 9).map(i => (200L + i, 1, jitter(b, i))) ++
         Seq((101L, 0, jitter(b, 1)))
     val e = rows.toDF("vec_id", "label", "v")
-    graft.functions.VectorExpressions.register(spark)
 
     val converged = Similarity.kmeansConverge(e, maxIter = 10, eps = 1e-12)
     def asMap(rs: Array[org.apache.spark.sql.Row]) =
@@ -273,7 +266,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // 8 planted clusters × 25 vectors in 64-d: cluster c owns dim
     // block [8c, 8c+8) at magnitude 4 plus a small deterministic
     // jitter, so true neighbors are cluster-mates by a wide margin
@@ -390,7 +382,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("multi-probe IVF: recall climbs with probes on the real corpus; all cells = exact") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val dir = "/root/testdata/sf0.01"
     // The real embeddings are only weakly clustered by label, so
     // single-probe IVF recall is intrinsically low there — the probes
@@ -429,7 +420,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // The 8×25 planted corpus from the recall test; queries are the
     // PURE cluster directions — deliberately not corpus rows, with
     // qids 0..7 that COLLIDE with corpus vec_ids. excludeSelf = false
@@ -519,7 +509,6 @@ class SimilaritySpec extends SparkSpec {
   test("SQ8 quantized top-k nearly matches exact L2 on the real corpus (s13)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -591,7 +580,6 @@ class SimilaritySpec extends SparkSpec {
   test("s21 filtered top-k: pre-filter returns full k where post-filter starves") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.functions._
     // query 0 points at +x; vectors 1-3 are the UNGATED near
     // neighbors (any post-filtered top-3 would be exactly these, and
@@ -616,7 +604,6 @@ class SimilaritySpec extends SparkSpec {
   test("s20 index append: out-of-grid batch vectors saturate, cells assigned (no retrain)") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.functions._
     def frame(rows: Seq[(Long, Int, Seq[Float])]) =
       rows.toDF("vec_id", "label", "embedding")
@@ -643,7 +630,6 @@ class SimilaritySpec extends SparkSpec {
   test("s22 recall curve: probes=1 equals s19; recall monotone in probes") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.01"
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -670,7 +656,6 @@ class SimilaritySpec extends SparkSpec {
       "quantized serve on the real corpus") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.01"
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("label"),
@@ -810,7 +795,6 @@ class SimilaritySpec extends SparkSpec {
   test("semanticDedup keeps the far-from-centroid member of a dup pair") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // Two planted clusters; 10/11 are near-duplicates (cosine
     // ≈ 0.99995), every other within-cluster pair sits well below the
     // tau = 0.99 threshold.
@@ -843,7 +827,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF-PQ: recall climbs with probes on the real corpus") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val dir = "/root/testdata/sf0.01"
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
@@ -915,7 +898,6 @@ class SimilaritySpec extends SparkSpec {
   test("semanticDedupBlocked: identical vectors never separate; drops ⊆ exact's drops") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // 4 planted clusters × 12 members (64-d, block structure +
     // jitter), plus an EXACT duplicate of each cluster's first member
     // under a high id. Identical vectors share every SRP sign bit, so
@@ -955,7 +937,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     // Two clearly-separated cells of 10 vectors each. Cell 0 loses 3
     // vectors (30% → compact verdict); cell 1 loses 1 (10% → keeps
     // serving with a tombstone).
@@ -1016,7 +997,6 @@ class SimilaritySpec extends SparkSpec {
     "full width self-tests at 1.0") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.functions._
     // q's TRUE neighbor (id 11) is orthogonal to it on the first two
     // dims, while the distractor (id 10) matches the prefix exactly
@@ -1038,7 +1018,6 @@ class SimilaritySpec extends SparkSpec {
     "quarter; ties break by vec_id; the outlier always survives") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.functions._
     // cluster 0: three identical prototypes + one outlier; n=4 drops
     // rnk <= 1, the tie among the prototypes breaks to vec_id 10
@@ -1064,7 +1043,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("s30: farthest-first picks the known spread on an engineered corpus") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     // Orthogonal axes are mutually at cosine distance 1; the diagonal
     // sits at 1 - 1/sqrt(2) ≈ 0.292893 from both e1 and e2. Start =
     // lowest id (1, on e1); both orthogonals are then tied at md=1 and
@@ -1118,7 +1096,6 @@ class SimilaritySpec extends SparkSpec {
       (11L, Seq(1.0, 0.0)),
       (12L, Seq(0.6, 0.8)))
       .toDF("vec_id", "v")
-    graft.functions.VectorExpressions.register(spark)
     val out = Similarity.mipsTopk(e, nq = 1, k = 3).collect()
       .map(r => r.getInt(3) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out(1) === ((10L, 6.0)), out.toString)
@@ -1176,7 +1153,6 @@ class SimilaritySpec extends SparkSpec {
     val sparkS = spark
     import sparkS.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     def vec(label: Int, i: Int): Seq[Double] =
       if (label == 0) Seq(1.0 + 0.01 * i, 1.5, 0.1, 0.1)
       else Seq(0.1, 0.1, 1.0 + 0.01 * i, 1.5)

@@ -31,7 +31,6 @@ class EmbeddingStreamSpec extends SparkSpec {
       .filter(col("ham") <= 31)
       .select("vec_a", "vec_b").distinct()
     val dot = graft.functions.VectorExpressions.dot _
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
