@@ -75,60 +75,23 @@ object Tables {
     memoizedSchema(spark, dir, "events")
   }
 
-  /** Per-(session, dir, table) memo of (listing fingerprint, inferred
-    * schema) — r20, the r19-verdict "reuse the shared Tables.load
-    * scans" floor cut, scoped to METADATA only: every `load` call
-    * previously re-read the parquet footer to infer the schema
-    * (driver-side, once per table per query per bench pass — ~1500
-    * inferences per full bench). The memo caches the inferred
-    * StructType and rebuilds the reader with `.schema(...)`, so the
-    * scan itself (and its pushdown/pruning) is planned exactly as
-    * before with fresh expression ids per call — no plan or data is
-    * cached, and two loads of the same table still join without
-    * self-join ambiguity. Invalidation follows the Graph.pairsMemo
-    * listing-fingerprint discipline (sorted path+len+mtime fold), so
-    * a mid-session rewrite re-infers; entries of stopped sessions are
-    * pruned on access.
+  /** Per-(session, dir, table) memo of the inferred schema — r20,
+    * scoped to METADATA only: every `load` call previously re-read the
+    * parquet footer to infer the schema (driver-side, once per table
+    * per query per bench pass — ~1500 inferences per full bench). The
+    * memo caches the inferred StructType and rebuilds the reader with
+    * `.schema(...)`, so the scan itself (and its pushdown/pruning) is
+    * planned exactly as before with fresh expression ids per call — no
+    * plan or data is cached, and two loads of the same table still
+    * join without self-join ambiguity. Reuse and invalidation: see
+    * [[SessionMemo]] (a mid-session rewrite re-infers).
     */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Long, StructType)]
-
-  private def listingFingerprint(spark: SparkSession,
-      p0: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(p0)
-    val fs = p.getFileSystem(conf)
-    var h = 1125899906842597L
-    if (fs.exists(p)) {
-      val buf = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        buf += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-      buf.sortBy(_._1).foreach { case (path, len, mt) =>
-        h = h * 31 + path.hashCode
-        h = h * 31 + len
-        h = h * 31 + mt
-      }
-    }
-    h
-  }
+  private val schemaMemo = new SessionMemo[(String, String), StructType]
 
   private def memoizedSchema(spark: SparkSession, dir: String,
       name: String): StructType = {
-    schemaMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(schemaMemo.remove)
-    val key = (spark, dir, name)
     val p = path(dir, name)
-    val fp = listingFingerprint(spark, p)
-    schemaMemo.get(key) match {
-      case Some((`fp`, s)) => s
-      case _ =>
-        val s = spark.read.parquet(p).schema
-        schemaMemo.put(key, (fp, s))
-        s
-    }
+    schemaMemo(spark, (dir, name), Seq(p))(spark.read.parquet(p).schema)
   }
 
   /** Load one table. `events` gets `ts` normalised to TimestampType

@@ -47,7 +47,7 @@ object EtlBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
-    val tmp = Files.createTempDirectory("etlbench").toFile
+    val tmp = graft.ops.SourceSinks.tmp("etlbench")
     val xml = s"$tmp/releases.xml.gz"
     val t0 = System.nanoTime()
     genXml(xml, n)

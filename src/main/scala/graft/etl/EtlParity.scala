@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Q
+import graft.ops.{Q, SourceSinks}
 
 /** End-to-end oracle coverage for the ETL flagship path
   * (`main.rs:436-473`): convert the checked-in releases fixture with
@@ -30,8 +30,7 @@ object EtlParity {
       (s, dir) => {
         // `dir` (the sf tables) is unused: this query's input is the
         // checked-in XML fixture — the ETL is the thing under test.
-        val work = Files.createTempDirectory("graft_e01").toFile
-        work.deleteOnExit()
+        val work = SourceSinks.tmp("graft_e01")
         val xml = new java.io.File(work, "releases.xml")
         val in = getClass.getResourceAsStream("/releases_fixture.xml")
         try Files.copy(in, xml.toPath)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Graph analytics over the TPC-H trade graph — the operator family a
   * corpus pipeline reaches for when documents/entities link to each
@@ -31,25 +31,14 @@ object Graph {
       .select(col("l_suppkey").as("sk"), col("o_custkey").as("ck"))
       .distinct()
 
-  /** Per-(session, dir) memo of the checkpointed pair table — the
-    * [[graft.ops.Pipeline]] `gateMemo` discipline applied to the
-    * graph family's shared scan: all registered graph queries start
-    * from the SAME lineitem⋈orders DISTINCT, so a bench pass would
-    * otherwise re-scan both tables and re-shuffle the distinct once
-    * per query. Entries of stopped sessions are dropped on access
-    * (their blocks died with the session). The value carries a
-    * FINGERPRINT of the two source parquet directories (sorted file
-    * paths + lengths + mtimes — a footer-free driver listing): if
-    * the files under `dir` are rewritten mid-session, the next
-    * access sees a changed fingerprint, frees the stale checkpoint
-    * and rebuilds — the memo can never serve pairs the oracle's
-    * fresh read would contradict. Resolution bound: a rewrite that
-    * lands inside one mtime granule with identical paths AND lengths
-    * is below what a listing can distinguish;
-    * [[invalidateTradePairs]] is the explicit path for that case.
+  /** Per-(session, dir) memo of the checkpointed dated pair table:
+    * all registered graph queries start from the SAME lineitem⋈orders
+    * scan, so a bench pass would otherwise re-scan both tables and
+    * re-shuffle once per query. Reuse, invalidation on a rewrite of
+    * either table, and freeing: see [[graft.SessionMemo]].
     */
-  private val pairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Long, DataFrame)]
+  private val pairsMemo =
+    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
 
   /** Per-round join-strategy pick for the iterative primitives (guide
     * §3.1: pick the strategy deliberately; §2.4: a broadcast join
@@ -126,79 +115,6 @@ object Graph {
   private[graft] def rowBytes(rows: Long, cols: Int): Long =
     rows * (16L + 8L * cols)
 
-  /** Driver-side listing fingerprint of the tables the pair scan
-    * reads. Sorted before folding so FS listing order can't flip it.
-    */
-  private def pairsFingerprint(s: SparkSession, dir: String): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    var h = 1125899906842597L
-    Seq("lineitem", "orders").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(Tables.path(dir, t))
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
-        val buf = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          buf += ((st.getPath.toString, st.getLen,
-            st.getModificationTime))
-        }
-        buf.sortBy(_._1).foreach { case (path, len, mt) =>
-          h = h * 31 + path.hashCode
-          h = h * 31 + len
-          h = h * 31 + mt
-        }
-      }
-    }
-    h
-  }
-
-  /** Per-key build monitors for [[tradePairs]]: the r17 version held
-    * ONE global lock across the fingerprint listing AND the
-    * derivePairs build (a cluster job), so callers for unrelated
-    * (session, dir) keys blocked behind each other. Now the global
-    * lock is held only long enough to resolve the key's monitor
-    * (no cluster work under it — getOrElseUpdate alone could mint
-    * two monitors under a race); the fingerprint + build + memo
-    * update run under the PER-KEY monitor, so distinct dirs build
-    * concurrently while same-key callers still serialize (they would
-    * have waited on the identical build anyway, and double-building
-    * would leak the losing checkpoint's blocks).
-    */
-  private val pairsLocks = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Object]
-
-  /** The shared memo body — one checkpointed artifact per (session,
-    * dir, kind), fingerprint-invalidated; see [[pairsMemo]].
-    */
-  private def memoizedPairs(s: SparkSession, dir: String, kind: String)
-      (build: => DataFrame): DataFrame = {
-    val key = (s, dir, kind)
-    val lock = pairsLocks.synchronized {
-      // Stopped sessions: drop their memo entries (the checkpointed
-      // blocks died with the session — nothing to free) and their
-      // monitors.
-      pairsLocks.keys.filter(_._1.sparkContext.isStopped).foreach { k =>
-        pairsLocks.remove(k)
-        pairsMemo.remove(k)
-      }
-      pairsLocks.getOrElseUpdate(key, new Object)
-    }
-    lock.synchronized {
-      val fp = pairsFingerprint(s, dir)
-      pairsMemo.get(key) match {
-        case Some((`fp`, df)) => df
-        case stale =>
-          stale.foreach { case (_, df) =>
-            Similarity.freeCheckpoint(df)
-          }
-          val built = build.localCheckpoint()
-          pairsMemo.put(key, (fp, built))
-          built
-      }
-    }
-  }
-
   /** The distinct pair table, derived from [[datedTradePairsCached]]'s
     * memo instead of a second lineitem⋈orders pass: the dated table
     * is already grouped by (sk, ck), so projecting away d0 IS the
@@ -210,25 +126,15 @@ object Graph {
   def tradePairs(s: SparkSession, dir: String): DataFrame =
     datedTradePairsCached(s, dir).select("sk", "ck")
 
-  /** Per-(session, dir) memo of the checkpointed DATED pair table —
-    * the [[tradePairs]] discipline extended to q88/q89/st34/st36's
-    * shared (sk, ck, d0) scan (r19: previously each of the four
-    * rebuilt it per bench pass).
+  /** The memoized DATED pair table (see [[pairsMemo]]) — q88/q89/
+    * st34/st36's shared (sk, ck, d0) scan, which [[tradePairs]] also
+    * projects (r19: previously each of the four rebuilt it per bench
+    * pass).
     */
   def datedTradePairsCached(s: SparkSession, dir: String): DataFrame =
-    memoizedPairs(s, dir, "dated")(
+    pairsMemo(s, dir, Seq("lineitem", "orders").map(Tables.path(dir, _)))(
       datedTradePairs(Tables.load(s, dir, "lineitem"),
-        Tables.load(s, dir, "orders")))
-
-  /** Drop (and free) this session's memoized pair tables for `dir` —
-    * the explicit invalidation path (`Pipeline.invalidateGate`'s
-    * rule).
-    */
-  def invalidateTradePairs(s: SparkSession, dir: String): Unit =
-    Seq("pairs", "dated").foreach { kind =>
-      pairsMemo.remove((s, dir, kind))
-        .foreach { case (_, df) => Similarity.freeCheckpoint(df) }
-    }
+        Tables.load(s, dir, "orders")).localCheckpoint())
 
   /** The family's shared symmetric edge encoding: disjoint node ids
     * (supplier 2k, customer 2k+1), one edge per direction. Factored

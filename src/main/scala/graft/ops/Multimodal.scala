@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
   * metadata, with decode/feature-extract stubs.
@@ -104,42 +104,25 @@ object Multimodal {
       n, feats)
   }
 
-  /** Per-(session, dir) memo of [[decodedFrame]] — the Similarity
-    * artifact-memo discipline (ivfSq8TrainShared): the decode is the
+  /** Per-(session, dir) memo of [[decodedFrame]]: the decode is the
     * expensive codec/model-inference boundary, and m05/m06/m07 each
     * consume the SAME decoded corpus, so repeated Verify/Bench passes
     * reuse one pinned localCheckpoint instead of stacking a fresh
-    * full-corpus checkpoint per invocation and leaving the old blocks
-    * to the ContextCleaner (the r12 ADVICE item). Entries of stopped
-    * sessions are dropped on insert — their checkpointed blocks died
-    * with the session.
+    * full-corpus checkpoint per invocation (the r12 ADVICE item).
+    * Reuse, invalidation on a rewrite of `documents`, and freeing: see
+    * [[graft.SessionMemo]].
     */
-  private val decodedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val decodedMemo =
+    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
 
   /** The decoded-feature frame (doc_id, width, height, n_bytes, v) —
     * built ONCE per (session, dir) and localCheckpoint'd: the
     * m05/m07 self-joins (two sides) and m06's extra dims branch would
     * otherwise re-run the whole corpus decode per consumer.
     */
-  private def decodedFrame(s: SparkSession, dir: String): DataFrame = {
-    // Evict only entries of STOPPED sessions: evicting any other
-    // session's entry would (a) thrash the memo when two live
-    // sessions alternate and (b) leave the evicted frame's
-    // checkpointed blocks pinned in its still-live session. A stopped
-    // session's blocks died with it, so plain removal suffices.
-    decodedMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(decodedMemo.remove)
-    decodedMemo.getOrElseUpdate((s, dir),
+  private def decodedFrame(s: SparkSession, dir: String): DataFrame =
+    decodedMemo(s, dir, Seq(Tables.path(dir, "documents")))(
       decodeDocs(Tables.load(s, dir, "documents")).localCheckpoint())
-  }
-
-  /** Drop (and free) this session's memoized decode for `dir` — the
-    * explicit invalidation path for a corpus rewritten mid-session
-    * (the memo otherwise serves the stale decode by design).
-    */
-  def invalidateDecoded(s: SparkSession, dir: String): Unit =
-    decodedMemo.remove((s, dir)).foreach(Similarity.freeCheckpoint)
 
   /** The un-memoized decode of an arbitrary (doc_id, text) frame —
     * factored so ScaleSmoke can drive it on scaled corpora.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -692,32 +692,26 @@ object Pipeline {
         ORDER BY source"""))
   )
 
-  /** Per-(session, dir) memo of the gate verdict frame — the
-    * [[graft.ops.Multimodal]] `decodedMemo` discipline applied to the
-    * engine's most expensive composition: p08 AND p09 both consume
-    * the same verdict frame, so a 2-pass bench would otherwise run
-    * the full three-tier gate four times. Entries of stopped sessions
-    * are dropped on insert (their checkpointed blocks died with the
-    * session).
+  /** Per-(session, dir) memo of the gate verdict frame: p08 AND p09
+    * both consume it, so a 2-pass bench would otherwise run the full
+    * three-tier gate four times. Reuse, invalidation on a rewrite of
+    * `documents`, and freeing: see [[graft.SessionMemo]].
     */
-  private val gateMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val gateMemo =
+    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
 
   /** The p08 gate body, factored so p09's release step can consume
     * the same verdict frame; memoized per (session, dir) and pinned
     * as ONE localCheckpoint. See the p08 entry for the design notes.
     */
-  def admissionGate(s: SparkSession, dir: String): DataFrame = {
-    gateMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(gateMemo.remove)
-    gateMemo.getOrElseUpdate((s, dir), {
+  def admissionGate(s: SparkSession, dir: String): DataFrame =
+    gateMemo(s, dir, Seq(Tables.path(dir, "documents"))) {
       val (verdictFrame, lm) = admissionGateFresh(s, dir)
       val pinned = verdictFrame.localCheckpoint()
       // The pinned verdict supersedes the intermediate lm pin.
       Similarity.freeCheckpoint(lm)
       pinned
-    })
-  }
+    }
 
   /** The un-memoized gate construction (verdict frame, plus the
     * intermediate lm checkpoint the caller must free once done) —
@@ -757,13 +751,6 @@ object Pipeline {
           .otherwise("admitted").as("verdict"))
     (verdictFrame, lm)
   }
-
-  /** Drop (and free) this session's memoized gate verdict for `dir` —
-    * the explicit invalidation path for a corpus rewritten
-    * mid-session (`Multimodal.invalidateDecoded`'s rule).
-    */
-  def invalidateGate(s: SparkSession, dir: String): Unit =
-    gateMemo.remove((s, dir)).foreach(Similarity.freeCheckpoint)
 
   // Independent restatement: the repetition gate needs only each
   // doc's MAX n-gram count (which gram wins a tie never moves the

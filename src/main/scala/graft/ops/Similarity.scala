@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-d).
@@ -942,14 +942,14 @@ object Similarity {
     * call runs on coarse-cell RESIDUALS and is memoized at its own
     * level.
     */
-  private val pqArtifacts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
+  private val pqArtifacts =
+    new SessionMemo[(String, Int), (DataFrame, DataFrame)](freePair)
 
   /** [[pqTrain]] with the per-session artifact memo above. */
   def pqTrainShared(
       spark: SparkSession, dir: String, e: => DataFrame, rounds: Int = 2)
       : (DataFrame, DataFrame) =
-    memoized(pqArtifacts, (spark, dir, rounds))(pqTrain(e, rounds))
+    pqArtifacts(spark, (dir, rounds), embSources(dir))(pqTrain(e, rounds))
 
   def pqTrain(e0: DataFrame, rounds: Int = 2): (DataFrame, DataFrame) = {
     require(rounds >= 1, s"need at least one round, got $rounds")
@@ -1059,27 +1059,27 @@ object Similarity {
     * share one corpus and one parameterization, so the second query
     * (and Bench's repeat passes) reuses the first build instead of
     * re-paying coarse k-means + per-cell PQ (~25 s each at sf0.1,
-    * ~22 % of the round-9 bench total between them). Keyed by the
-    * session INSTANCE: checkpointed frames die with their session, so
-    * a fresh session re-trains rather than reading dead blocks.
+    * ~22 % of the round-9 bench total between them). Every artifact
+    * memo here is a [[graft.SessionMemo]] over the `embeddings` table
+    * (the [[emb]] source): a fresh session, or a rewrite of that
+    * table, re-trains rather than reading dead or stale blocks.
     */
-  private val ivfPqArtifacts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int),
-      (DataFrame, DataFrame, DataFrame, DataFrame)]
+  private val ivfPqArtifacts = new SessionMemo[(String, Int),
+    (DataFrame, DataFrame, DataFrame, DataFrame)]({
+      case (coarse, cells, cb, codes) =>
+        Seq(coarse, cells, cb, codes).foreach(freeCheckpoint)
+    })
 
-  /** Memo insert that first drops entries of STOPPED sessions: their
-    * checkpointed frames died with their session, and keeping the
-    * entry would pin the stopped session (and its plans) for the JVM
-    * lifetime. Only stopped ones — evicting any other LIVE session's
-    * entry would thrash the memo when two sessions alternate and
-    * leave the evicted frames' checkpoint blocks pinned (the
-    * decodedFrame rule). Keeps the maps at O(live sessions × dirs).
+  /** The source paths the artifact memos fingerprint: the table
+    * [[emb]] reads.
     */
-  private def memoized[V](
-      map: scala.collection.concurrent.TrieMap[(SparkSession, String, Int), V],
-      key: (SparkSession, String, Int))(build: => V): V = {
-    map.keys.filter(_._1.sparkContext.isStopped).foreach(map.remove)
-    map.getOrElseUpdate(key, build)
+  private def embSources(dir: String): Seq[String] =
+    Seq(Tables.path(dir, "embeddings"))
+
+  /** Frees both checkpointed halves of a two-artifact build. */
+  private def freePair(p: (DataFrame, DataFrame)): Unit = {
+    freeCheckpoint(p._1)
+    freeCheckpoint(p._2)
   }
 
   /** [[ivfPqTrain]] with the per-session artifact memo above. `e` is
@@ -1088,7 +1088,8 @@ object Similarity {
   def ivfPqTrainShared(
       spark: SparkSession, dir: String, e: => DataFrame, rounds: Int = 2)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    memoized(ivfPqArtifacts, (spark, dir, rounds))(ivfPqTrain(e, rounds))
+    ivfPqArtifacts(spark, (dir, rounds), embSources(dir))(
+      ivfPqTrain(e, rounds))
 
   def ivfPqTrain(e: DataFrame, rounds: Int = 2)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -1250,17 +1251,17 @@ object Similarity {
     * s07/s08/s11/s12, so a bench repeat (and a deployment's repeated
     * query batches) measures the search scan only. The 1-row params
     * checkpoint is pinned for the session lifetime BY DESIGN (it is
-    * the shared artifact; [[memoized]] evicts it with dead sessions).
+    * the shared artifact).
     */
-  private val sq8Artifacts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
+  private val sq8Artifacts =
+    new SessionMemo[String, (DataFrame, DataFrame)](freePair)
 
   /** SQ8 index build with the per-session artifact memo. `e` is
     * by-name: cache hits never build the source frame.
     */
   def sq8TrainShared(spark: SparkSession, dir: String, e: => DataFrame)
       : (DataFrame, DataFrame) =
-    memoized(sq8Artifacts, (spark, dir, 0)) {
+    sq8Artifacts(spark, dir, embSources(dir)) {
       val corpus = e
       val params = sq8Params(corpus).coalesce(1).localCheckpoint()
       val codes = sq8Encode(corpus, params).localCheckpoint()
@@ -1451,12 +1452,12 @@ object Similarity {
     * so repeated query batches (and bench passes) measure the probed
     * search scan, not the build.
     */
-  private val ivfSq8Artifacts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
+  private val ivfSq8Artifacts =
+    new SessionMemo[String, (DataFrame, DataFrame)](freePair)
 
   def ivfSq8TrainShared(spark: SparkSession, dir: String, e: => DataFrame)
       : (DataFrame, DataFrame) =
-    memoized(ivfSq8Artifacts, (spark, dir, 0))(ivfSq8Train(e))
+    ivfSq8Artifacts(spark, dir, embSources(dir))(ivfSq8Train(e))
 
   /** The un-memoized IVF-SQ8 build — (centroids, labeled codes),
     * both checkpointed. ScaleSmoke times this separately from the
@@ -1671,10 +1672,11 @@ object Similarity {
   }
 
   /** Per-(session, dir) memo of the PERSISTED index root (s26) —
-    * written once per session, the q63 standing-layout discipline.
+    * written once per session (and again after a rewrite of
+    * `embeddings`), the q63 standing-layout discipline. Nothing to
+    * free: the root is a temp dir deleted at JVM exit.
     */
-  private val persistedIndex = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), String]
+  private val persistedIndex = new SessionMemo[String, String]
 
   /** Persist the IVF-SQ8 index as ON-DISK artifacts (s26's build
     * half): codes land as parquet PARTITIONED BY CELL — the IVF
@@ -1686,7 +1688,7 @@ object Similarity {
     * session serves from without retraining anything.
     */
   def persistIndex(spark: SparkSession, dir: String): String =
-    memoized(persistedIndex, (spark, dir, 0)) {
+    persistedIndex(spark, dir, embSources(dir)) {
       val (cent, codes) = ivfSq8TrainShared(spark, dir, emb(spark, dir))
       val (params, _) = sq8TrainShared(spark, dir, emb(spark, dir))
       val root = new java.io.File(

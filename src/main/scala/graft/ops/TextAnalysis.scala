@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over `documents`: language ID (marker-word
@@ -1159,18 +1159,16 @@ object TextAnalysis {
   private[graft] def classifierSigmoid(z: Column): Column =
     lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
 
-  /** Per-(session, seed, iters, lr, plan) memo of the trained
-    * weights — the gateMemo/decodedMemo discipline: t28 AND c20 fit
-    * the same model, so a multi-pass bench would otherwise run the
-    * 10-round GD twice per pass. Keyed by the feature frame's
-    * ANALYZED PLAN (two different corpora never collide); entries of
-    * stopped sessions dropped on insert. The weights are 4 doubles —
-    * nothing checkpointed, so there is no block-manager footprint to
-    * free.
+  /** Per-(session, seed, iters, lr, corpus) memo of the trained
+    * weights: t28 AND c20 fit the same model, so a multi-pass bench
+    * would otherwise run the 10-round GD twice per pass. Keyed by the
+    * corpus's file set and ANALYZED PLAN (two different corpora never
+    * collide) and invalidated when those files change — see
+    * [[graft.SessionMemo]]. The weights are 4 doubles — nothing
+    * checkpointed, so there is nothing to free.
     */
-  private val fitMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Double, String),
-      Option[Array[Double]]]
+  private val fitMemo = new SessionMemo[(String, Int, Double, String),
+    Option[Array[Double]]]
 
   /** The t28 FIT, factored so compositions (c20's classifier-gated
     * budget) can reuse the trained coefficients: returns the feature
@@ -1182,21 +1180,17 @@ object TextAnalysis {
     */
   private[graft] def classifierFit(documents: DataFrame, seed: String,
       iters: Int, lr: Double): Option[(DataFrame, Array[Double])] = {
-    val s0 = documents.sparkSession
-    fitMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(fitMemo.remove)
     // A LocalRelation/LogicalRDD canonicalizes WITHOUT its data, so
     // two distinct in-memory corpora would share one key and the
     // second caller would get the first corpus's weights — memoize
     // only file-backed corpora, whose identity is the file set plus
     // the (pushdown-bearing) canonical plan.
-    val files = documents.inputFiles
+    val files = documents.inputFiles.sorted.toSeq
     if (files.isEmpty) classifierFitFresh(documents, seed, iters, lr)
     else {
-      val key = (s0, seed, iters, lr,
-        files.sorted.mkString(",") + "|" +
-          documents.queryExecution.analyzed.canonicalized.toString)
-      fitMemo.getOrElseUpdate(key,
+      val key = (seed, iters, lr, files.mkString(",") + "|" +
+        documents.queryExecution.analyzed.canonicalized.toString)
+      fitMemo(documents.sparkSession, key, files)(
         classifierFitFresh(documents, seed, iters, lr).map(_._2))
         .map(w => (classifierFeatures(documents, seed), w))
     }
