@@ -1,9 +1,8 @@
 package graft.etl
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Discogs `releases` XML (gzipped) → Snappy Parquet — the whole
   * reference program (`/root/reference/src/main.rs`), re-expressed
@@ -13,12 +12,13 @@ import org.apache.spark.sql.functions._
   * one-release-per-line dump, one StAX pull parser per partition
   * ([[ReleaseParser]], the reference's own streaming design: dispatch
   * on tag name, skip the discarded subtrees in the same pass, fail on
-  * unknown content) emitting rows of [[ReleaseSchema.xmlSchema]], one
-  * projection, one `write.parquet` — the Parquet writer supplies the
-  * batching, dictionary encoding and Snappy compression the reference
-  * implements manually (SURVEY.md §4).
+  * unknown content) emitting rows of [[ReleaseSchema.outputSchema]],
+  * the one schema, and one `write.parquet` — the Parquet writer
+  * supplies the batching, dictionary encoding and Snappy compression
+  * the reference implements manually (SURVEY.md §4).
   *
-  * Semantics replicated exactly (pinned by DiscogsReleasesSpec):
+  * Semantics replicated exactly, all in the parser (pinned by
+  * DiscogsReleasesSpec):
   *  - `catno` attr → `cat_no` column (`main.rs:649-653` vs `181`)
   *  - `master_id`/`is_main_release` null iff the `<master_id>`
   *    element is absent (`main.rs:510`, `557-560`)
@@ -28,7 +28,11 @@ import org.apache.spark.sql.functions._
   *    `main.rs:391-403`)
   *  - `role`/`tracks` and the eleven release-level skip-subtrees are
   *    never materialized (`main.rs:742-749`, `758-917`); all eleven
-  *    are the reference's own (see [[ReleaseSchema.xmlSchema]])
+  *    are the reference's own (listed at `ReleaseParser.skipped`)
+  *  - `id`, `status`, `title` and artist `id`/`name` are required,
+  *    as the reference's schema declares (`main.rs:185-217`): a
+  *    release missing one fails, and so does an `id`/`master_id`
+  *    outside `0..Int.MaxValue`
   *
   * Known deviation (documented, not copied): the reference manually
   * unescapes ONLY `&amp;` in genre/style text (`main.rs:596`, `619`),
@@ -44,65 +48,23 @@ import org.apache.spark.sql.functions._
   */
 object DiscogsReleases {
 
-  private def emptyArr(tpe: String): Column = array().cast(s"array<$tpe>")
-
-  /** Parse the dump into rows of [[ReleaseSchema.xmlSchema]]: the lines
-    * of `input` (`spark.read.text`; gzip is transparent, one task per
-    * `.gz` file) streamed through one [[ReleaseParser]] per partition. A line that is neither
-    * a document frame nor one whole release, a malformed value or
-    * unknown content fails the task with a message naming the release
-    * id (or the line) — the reference's panic-on-unexpected, SURVEY
-    * S3/S5/S6.
+  /** Parse the dump into rows of [[ReleaseSchema.outputSchema]]: the
+    * lines of `input` (`spark.read.text`; gzip is transparent, one task
+    * per `.gz` file) streamed through one [[ReleaseParser]] per
+    * partition. A line that is neither a document frame nor one whole
+    * release, a malformed or missing value or unknown content fails
+    * the task with a message naming the release id (or the line) — the
+    * reference's panic-on-unexpected, SURVEY S3/S5/S6.
     */
   def read(spark: SparkSession, input: String): DataFrame = {
-    val schema = ReleaseSchema.xmlSchema
-    // Rows reach catalyst through Spark's interpreted converter, not a
-    // generated row encoder. Spark keys generated classes by session
-    // class loader, so every new session would compile the encoder of
-    // this nested schema again (~0.1 s per session); and fused into a
-    // whole-stage method it is past HotSpot's 8 KB JIT limit.
     val rows = spark.read.text(input).queryExecution.toRdd.mapPartitions { lines =>
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
       new ReleaseParser(lines.map(_.getUTF8String(0).toString))
-        .map(toCatalyst(_).asInstanceOf[InternalRow])
     }
-    GraftBridge.internalCreateDataFrame(spark, rows, schema)
+    GraftBridge.internalCreateDataFrame(spark, rows, ReleaseSchema.outputSchema)
   }
 
-  /** The single projection that produces the reference's output
-    * schema: attribute casts, nested renames via `transform`, the
-    * master_id flattening, and empty-list defaults.
-    */
-  def transformReleases(raw: DataFrame): DataFrame = {
-    // The parser yields "" for an empty element; the reference pushes
-    // null for empty <anv>/<join> (main.rs:718-741) — nullif restores
-    // that rule exactly.
-    val artists = coalesce(
-      transform(col("artists.artist"), a =>
-        struct(
-          a.getField("id").as("id"),
-          a.getField("name").as("name"),
-          nullif(a.getField("anv"), lit("")).as("anv"),
-          nullif(a.getField("join"), lit("")).as("join"))),
-      emptyArr("struct<id:string,name:string,anv:string,join:string>"))
-    val labels = coalesce(
-      transform(col("labels.label"), l =>
-        struct(
-          l.getField("_id").as("id"),
-          l.getField("_catno").as("cat_no"),
-          l.getField("_name").as("name"))),
-      emptyArr("struct<id:string,cat_no:string,name:string>"))
-    raw.select(
-      col("_id").cast("int").as("id"),
-      col("_status").as("status"),
-      col("title"),
-      artists.as("artists"),
-      coalesce(col("genres.genre"), emptyArr("string")).as("genres"),
-      coalesce(col("styles.style"), emptyArr("string")).as("styles"),
-      labels.as("labels"),
-      col("master_id._is_main_release").as("is_main_release"),
-      col("master_id._VALUE").cast("int").as("master_id"))
-  }
+  /** The identity ([[read]] yields output rows), kept because perfbench's layer probes call it. */
+  def transformReleases(raw: DataFrame): DataFrame = raw
 
   /** Post-read assertions standing in for the reference's runtime
     * panics (`main.rs:496-500`, `826-836`): required fields present,

@@ -8,8 +8,8 @@ import graft.ops.{Q, SourceSinks}
 
 /** End-to-end oracle coverage for the ETL flagship path
   * (`main.rs:436-473`): convert the checked-in releases fixture with
-  * the REAL pipeline (gzip-less XML read → transform → snappy parquet
-  * → read back), then flatten the nested output to scalar columns the
+  * the REAL pipeline (gzip-less XML read → snappy parquet → read
+  * back), then flatten the nested output to scalar columns the
   * driver can hash-compare.
   *
   * The oracle side pins the expected values as literals: DuckDB cannot

@@ -6,14 +6,17 @@ import javax.xml.stream.XMLStreamConstants._
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass pull parser for the release lines of a Discogs dump — the
   * reference's design (`main.rs:73-77`, `506-565`, `742-917`) on the
-  * JDK's StAX reader: dispatch on tag name, keep the fields of
-  * [[ReleaseSchema.xmlSchema]], skip `role`/`tracks` and the
-  * release-level skip-subtrees without building anything from them,
-  * and fail on anything the reference's grammar does not know.
+  * JDK's StAX reader: dispatch on tag name, fill one row of
+  * [[ReleaseSchema.outputSchema]] per release, skip `role`/`tracks`
+  * and the release-level skip-subtrees without building anything from
+  * them, and fail on anything the reference's grammar does not know.
   *
   * `lines` are one partition's lines of a one-release-per-line dump:
   * frame lines ([[ReleaseParser.isFrameLine]]) and lines that each
@@ -29,10 +32,18 @@ import org.apache.spark.sql.Row
   * named by its path, attributes with a `_` prefix:
   * `artists.artist.bogus`, `master_id._weird`.
   *
-  * Text and attribute values are trimmed; an empty element reads as
-  * "" (the transform turns empty `anv`/`join` into null).
+  * The rows go straight to the Parquet writer, which trusts the
+  * schema's nullability, so every rule of the output is enforced here
+  * (`main.rs:185-217`, `391-403`, `718-741`): a release without `id`,
+  * `status` or `<title>`, an artist without `<id>` or `<name>`, and an
+  * `id` or `master_id` outside `0..Int.MaxValue` (the reference's
+  * `u32` in an `Int` column) fail. Text and attribute values are
+  * trimmed; an empty `<anv>`/`<join>` is null, any other empty element
+  * is ""; an absent list container is an empty list; `master_id` and
+  * `is_main_release` are null when `<master_id>` is absent.
   */
-private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator[Row] {
+private[etl] final class ReleaseParser(lines: Iterator[String])
+    extends Iterator[InternalRow] {
   import ReleaseParser._
 
   private val in = new LinesReader(lines)
@@ -68,7 +79,7 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
     !done
   }
 
-  def next(): Row = {
+  def next(): InternalRow = {
     if (!hasNext) throw new NoSuchElementException
     ready = false
     guard {
@@ -90,45 +101,49 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
         fail(e.getMessage)
     }
 
-  private def release(r: XMLStreamReader): Row = {
-    var id: java.lang.Long = null
-    var status: String = null
+  private def release(r: XMLStreamReader): InternalRow = {
+    var id = -1
+    var status: UTF8String = null
     var i = 0
     while (i < r.getAttributeCount) {
       r.getAttributeLocalName(i) match {
         case "id" =>
           rawId = r.getAttributeValue(i)
-          id = long(rawId.trim, "id")
-        case "status" => status = r.getAttributeValue(i).trim
+          id = u32(rawId.trim, "id")
+        case "status" => status = attr(r, i)
         case a => unknown("_" + a) // main.rs:496-500
       }
       i += 1
     }
-    var title: String = null
-    var artists: Row = null
-    var genres: Row = null
-    var styles: Row = null
-    var labels: Row = null
-    var master: Row = null
+    var title: UTF8String = null
+    var artists, genres, styles, labels: ArrayData = emptyList
+    var isMain, master: Any = null
     while (r.nextTag() == START_ELEMENT) {
       r.getLocalName match {
-        case "title" => title = leaf(r, "title")
-        case "artists" => artists = Row(list(r, "artists", "artist")(artist))
-        case "genres" => genres = Row(list(r, "genres", "genre")(leaf(_, "genres.genre")))
-        case "styles" => styles = Row(list(r, "styles", "style")(leaf(_, "styles.style")))
-        case "labels" => labels = Row(list(r, "labels", "label")(label))
-        case "master_id" => master = masterId(r)
+        case "title" => title = utf8(leaf(r, "title"))
+        case "artists" => artists = list(r, "artists", "artist")(artist)
+        case "genres" => genres = list(r, "genres", "genre")(r => utf8(leaf(r, "genres.genre")))
+        case "styles" => styles = list(r, "styles", "style")(r => utf8(leaf(r, "styles.style")))
+        case "labels" => labels = list(r, "labels", "label")(label)
+        case "master_id" =>
+          isMain = isMainRelease(r)
+          master = masterId(r)
         case n if skipped(n) => skip(r) // main.rs:758-917
         case n => unknown(n) // main.rs:549-554
       }
     }
-    Row(id, status, title, artists, genres, styles, labels, master)
+    if (rawId == null) missing("_id")
+    if (status == null) missing("_status")
+    if (title == null) missing("title")
+    new GenericInternalRow(
+      Array[Any](id, status, title, artists, genres, styles, labels, isMain, master))
   }
 
-  /** `<artist>`: four text children; `role`/`tracks` read and
+  /** `<artist>`: four text children, `id`/`name` required and an empty
+    * `anv`/`join` null (`main.rs:718-741`); `role`/`tracks` read and
     * discarded (`main.rs:742-749`); anything else fails (`750-753`).
     */
-  private def artist(r: XMLStreamReader): Row = {
+  private def artist(r: XMLStreamReader): InternalRow = {
     noAttributes(r, "artists.artist")
     var id, name, anv, join: String = null
     while (r.nextTag() == START_ELEMENT) {
@@ -141,33 +156,37 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
         case n => unknown("artists.artist." + n)
       }
     }
-    Row(id, name, anv, join)
+    if (id == null) missing("artists.artist.id")
+    if (name == null) missing("artists.artist.name")
+    new GenericInternalRow(
+      Array[Any](utf8(id), utf8(name), nullIfEmpty(anv), nullIfEmpty(join)))
   }
 
   /** `<label>`: attributes only; unknown attributes are ignored, as
     * the reference does (`main.rs:662`).
     */
-  private def label(r: XMLStreamReader): Row = {
-    var id, catno, name: String = null
+  private def label(r: XMLStreamReader): InternalRow = {
+    var id, catno, name: UTF8String = null
     var i = 0
     while (i < r.getAttributeCount) {
       r.getAttributeLocalName(i) match {
-        case "id" => id = r.getAttributeValue(i).trim
-        case "catno" => catno = r.getAttributeValue(i).trim
-        case "name" => name = r.getAttributeValue(i).trim
+        case "id" => id = attr(r, i)
+        case "catno" => catno = attr(r, i)
+        case "name" => name = attr(r, i)
         case _ =>
       }
       i += 1
     }
     if (r.nextTag() == START_ELEMENT) unknown("labels.label." + r.getLocalName)
-    Row(id, catno, name)
+    new GenericInternalRow(Array[Any](id, catno, name))
   }
 
-  /** `<master_id is_main_release="…">N</master_id>` (`main.rs:815-851`);
-    * an empty element reads as a null id.
+  /** The `is_main_release` attribute of
+    * `<master_id is_main_release="…">N</master_id>` (`main.rs:815-851`),
+    * null when absent; any other attribute fails.
     */
-  private def masterId(r: XMLStreamReader): Row = {
-    var isMain: java.lang.Boolean = null
+  private def isMainRelease(r: XMLStreamReader): Any = {
+    var isMain: Any = null
     var i = 0
     while (i < r.getAttributeCount) {
       r.getAttributeLocalName(i) match {
@@ -181,20 +200,25 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
       }
       i += 1
     }
+    isMain
+  }
+
+  /** The `<master_id>` text; an empty element reads as a null id. */
+  private def masterId(r: XMLStreamReader): Any = {
     val v = text(r, "master_id")
-    Row(if (v.isEmpty) null else long(v, "master_id"), isMain)
+    if (v.isEmpty) null else u32(v, "master_id")
   }
 
   /** The items of a list container, each of which must be `item`. */
-  private def list[T](r: XMLStreamReader, path: String, item: String)(
-      one: XMLStreamReader => T): ArrayBuffer[T] = {
+  private def list(r: XMLStreamReader, path: String, item: String)(
+      one: XMLStreamReader => Any): ArrayData = {
     noAttributes(r, path)
-    val out = ArrayBuffer.empty[T]
+    val out = ArrayBuffer.empty[Any]
     while (r.nextTag() == START_ELEMENT) {
       if (r.getLocalName != item) unknown(path + "." + r.getLocalName)
       out += one(r)
     }
-    out
+    new GenericArrayData(out.toArray)
   }
 
   /** A text-only element without attributes. */
@@ -224,9 +248,24 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
   private def noAttributes(r: XMLStreamReader, path: String): Unit =
     if (r.getAttributeCount > 0) unknown(path + "._" + r.getAttributeLocalName(0))
 
-  private def long(v: String, what: String): java.lang.Long =
-    try java.lang.Long.valueOf(v)
+  private def attr(r: XMLStreamReader, i: Int): UTF8String =
+    utf8(r.getAttributeValue(i).trim)
+
+  /** A `u32` (the reference's type, SURVEY S5/S14) that fits the `Int`
+    * column.
+    */
+  private def u32(v: String, what: String): Int = {
+    val n = try java.lang.Long.parseLong(v)
     catch { case _: NumberFormatException => fail(s"$what is not a number: '$v'") }
+    if (n < 0 || n > Int.MaxValue) fail(s"$what is outside 0..${Int.MaxValue}: '$v'")
+    n.toInt
+  }
+
+  /** A non-null field of [[ReleaseSchema.outputSchema]] the release
+    * does not fill.
+    */
+  private def missing(path: String): Nothing =
+    fail(s"missing required release content: $path")
 
   private def unknown(path: String): Nothing =
     fail(s"unknown release content (reference would panic): $path")
@@ -240,12 +279,27 @@ private[etl] final class ReleaseParser(lines: Iterator[String]) extends Iterator
 private[etl] object ReleaseParser {
 
   /** The eleven release-level subtrees the reference reads and
-    * discards (`main.rs:758-917`; listed in [[ReleaseSchema.xmlSchema]]).
+    * discards. All eleven are the reference's own, none is an extra of
+    * real dumps: its release dispatch knows 17 children
+    * (`main.rs:506-565`), these eleven plus the six fields of
+    * [[ReleaseSchema.outputSchema]], and it has one discarding parser
+    * for each (`main.rs` lines): images 758-769, extraartists 771-780,
+    * formats 782-791, country 793-802, data_quality 804-813, tracklist
+    * 853-862, videos 864-873, released 875-884, companies 886-895,
+    * notes 897-906, identifiers 908-917.
     */
   private val skipped: Set[String] = Set(
     "images", "extraartists", "formats", "country", "data_quality",
     "tracklist", "videos", "released", "companies", "notes",
     "identifiers")
+
+  private val emptyList: ArrayData = new GenericArrayData(Array.empty[Any])
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** Null for an empty `<anv>`/`<join>` (`main.rs:718-741`). */
+  private def nullIfEmpty(s: String): UTF8String =
+    if (s == null || s.isEmpty) null else utf8(s)
 
   /** One JDK factory per JVM: names matched as written (no namespace
     * processing), coalesced text, no DTDs, no external entities — a

@@ -1294,12 +1294,12 @@ object Similarity {
 
   /** SQ8 brute-force top-k from the raw corpus — a fresh (non-shared)
     * build + search, for callers outside the per-session query
-    * registry (specs, ad-hoc frames).
+    * registry (specs, ad-hoc frames). Nothing is checkpointed: the
+    * grid ([[sq8Params]], min/max under `array_sort`) is deterministic,
+    * so each use of the codes may recompute it.
     */
-  def sq8Topk(e: DataFrame, k: Int): DataFrame = {
-    val params = sq8Params(e).coalesce(1).localCheckpoint()
-    sq8Search(sq8Encode(e, params), k)
-  }
+  def sq8Topk(e: DataFrame, k: Int): DataFrame =
+    sq8Search(sq8Encode(e, sq8Params(e)), k)
 
   // ------------------------------------------------------------------
   // Binary (sign-bit) quantization.
@@ -1469,6 +1469,7 @@ object Similarity {
     val codes = sq8Encode(e, params)
       .join(e.select(col("vec_id"), col("label")), "vec_id")
       .localCheckpoint()
+    freeCheckpoint(params) // the eager checkpoint above holds the codes
     (centroids, codes)
   }
 

@@ -38,6 +38,19 @@ class DiscogsReleasesSpec extends SparkSpec {
   private lazy val byId: Map[Int, Row] =
     result.collect().map(r => r.getInt(0) -> r).toMap
 
+  /** The footer of the fixture conversion's part file. */
+  private def footer: org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    byId // force the conversion
+    val part = new File(tmpDir, "out").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .get
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getAbsolutePath),
+        spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
   test("all releases parsed from gzipped XML") {
     assert(byId.keySet == Set(1, 2, 3, 4, 5))
   }
@@ -143,25 +156,31 @@ class DiscogsReleasesSpec extends SparkSpec {
     // low-cardinality string columns automatically — assert it
     // actually did, from the file footer.
     import scala.jdk.CollectionConverters._
-    byId // force the conversion
-    val part = new File(tmpDir, "out").listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .get
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-        spark.sparkContext.hadoopConfiguration))
-    try {
-      val statusEncodings = reader.getFooter.getBlocks.asScala
-        .flatMap(_.getColumns.asScala)
-        .filter(_.getPath.toDotString == "status")
-        .flatMap(_.getEncodings.asScala)
-        .toSet
-      assert(statusEncodings.exists(e =>
-        e == org.apache.parquet.column.Encoding.RLE_DICTIONARY ||
-          e == org.apache.parquet.column.Encoding.PLAIN_DICTIONARY),
-        s"status encodings: $statusEncodings")
-    } finally reader.close()
+    val statusEncodings = footer.getBlocks.asScala
+      .flatMap(_.getColumns.asScala)
+      .filter(_.getPath.toDotString == "status")
+      .flatMap(_.getEncodings.asScala)
+      .toSet
+    assert(statusEncodings.exists(e =>
+      e == org.apache.parquet.column.Encoding.RLE_DICTIONARY ||
+        e == org.apache.parquet.column.Encoding.PLAIN_DICTIONARY),
+      s"status encodings: $statusEncodings")
+  }
+
+  test("footer schema is the reference's, nullability included (main.rs:185-217)") {
+    import org.apache.parquet.schema.Type.Repetition.{OPTIONAL, REQUIRED}
+    val meta = footer.getFileMetaData
+    assert(org.apache.spark.sql.types.DataType.fromJson(
+      meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")) ==
+      ReleaseSchema.outputSchema)
+    val schema = meta.getSchema
+    def repetition(path: String*) = schema.getType(path: _*).getRepetition
+    val artist = Seq("artists", "list", "element")
+    Seq(Seq("id"), Seq("status"), Seq("title"), Seq("artists"), Seq("genres"),
+      Seq("styles"), Seq("labels"), artist :+ "id", artist :+ "name")
+      .foreach(p => assert(repetition(p: _*) == REQUIRED, s"$p in $schema"))
+    Seq(artist :+ "anv", artist :+ "join", Seq("is_main_release"), Seq("master_id"))
+      .foreach(p => assert(repetition(p: _*) == OPTIONAL, s"$p in $schema"))
   }
 
   test("rechunk splits one gz dump into parallel-ingestable chunks, conversion unchanged") {

@@ -78,6 +78,22 @@ class MalformedReleasesSpec extends SparkSpec {
     assert(msg.contains("Malformed release id=44"), msg)
   }
 
+  test("a release the output schema cannot hold fails, naming it") {
+    // Ids are the reference's u32 in an Int column; id, status, title
+    // and artist id/name are non-null columns.
+    Seq(
+      "3000000000" -> """<release id="3000000000" status="Accepted"><title>x</title></release>""",
+      "-5" -> """<release id="-5" status="Accepted"><title>x</title></release>""",
+      "48" -> """<release id="48" status="Accepted"><title>x</title><master_id is_main_release="true">3000000000</master_id></release>""",
+      "49" -> """<release id="49" status="Accepted"><genres><genre>g</genre></genres></release>""",
+      "50" -> """<release id="50"><title>x</title></release>""",
+      "51" -> """<release id="51" status="Accepted"><title>x</title><artists><artist><id>1</id></artist></artists></release>""")
+      .foreach { case (id, release) =>
+        val msg = failure(dump(s"unfit$id.xml.gz", good, release))
+        assert(msg.contains(s"Malformed release id=$id"), msg)
+      }
+  }
+
   test("a <!DOCTYPE> declaring an external entity fails and is never resolved") {
     val secret = new File(tmpDir, "secret.txt")
     Files.writeString(secret.toPath, "SECRET-7f3a")

@@ -146,7 +146,13 @@ class SimilaritySpec extends SparkSpec {
     val far = q.map(-_)
     val e = Seq((0L, 0, q), (5L, 0, scaled), (10L, 0, near), (20L, 0, far))
       .toDF("vec_id", "label", "v")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (cent, codes) = Similarity.ivfSq8Train(e)
+    // The build pins exactly the two checkpoints it returns.
+    def root(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore ==
+      Set(root(cent), root(codes)))
     val quant = Similarity.ivfSq8Search(e, cent, codes, k = 3)
       .filter(col("qid") === 0L).collect().map(_.getLong(2))
     assert(quant.head == 10L && quant.last == 5L,
@@ -526,9 +532,12 @@ class SimilaritySpec extends SparkSpec {
     val exact = dMap.groupBy(_._1._1).view.mapValues(
       _.toSeq.map { case ((_, v), d) => (d, v) }.sorted.take(5)
         .map(_._2).toSet).toMap
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val got = Similarity.sq8Topk(e, k = 5)
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    // The fresh build checkpoints nothing.
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore == Set.empty)
     val recall = (0L until 3L)
       .map(qid => (exact(qid) & got(qid)).size / 5.0).sum / 3.0
     // The sharper property than recall: whatever SQ8 retrieves must be
