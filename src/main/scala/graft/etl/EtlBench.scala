@@ -11,9 +11,11 @@ import java.util.zip.GZIPOutputStream
   * Usage: runMain graft.etl.EtlBench [nReleases]
   *
   * The reference is single-threaded by design (SURVEY §6); a single
-  * `.xml.gz` is likewise one non-splittable Spark task, so this
-  * measures the same single-stream bound. Multiple input files
-  * parallelize trivially (one task each).
+  * `.xml.gz` is likewise one non-splittable Spark task, but that task
+  * parses on a helper thread beside its scan and write, so the
+  * single-stream bound this measures is the slower of the two
+  * threads. Multiple input files parallelize trivially (one task
+  * each).
   */
 object EtlBench {
 

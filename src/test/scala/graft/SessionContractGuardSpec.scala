@@ -11,22 +11,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession.builder`, and main code that needs graft's functions,
   * strategy or rule relies on the session carrying its table. Keeps
   * [[SessionMemo]] the only session-scoped memo: main code that reuses
-  * an artifact across calls goes through it.
+  * an artifact across calls goes through it. Keeps [[etl.Overlapped]]
+  * the only thread the ETL starts: every other line of `graft.etl` runs
+  * on the task thread that owns Spark's resources.
   */
 class SessionContractGuardSpec extends AnyFunSuite {
 
-  /** `file:line: pattern` for every line of `src/main/scala` outside
-    * `owner` that contains one of `patterns`.
+  /** `file:line: pattern` for every line of `src/main/scala/<under>`
+    * outside `owner` that contains one of `patterns`.
     */
-  private def hits(owner: String, patterns: Seq[String]): Seq[String] = {
+  private def hits(owner: String, patterns: Seq[String], under: String = ""): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
     val sources = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != owner)
       .toSeq
     assert(sources.exists(_.getFileName.toString == "Bench.scala"), sources)
+    val dir = root.resolve(under)
+    assert(Files.isDirectory(dir), dir)
     for {
-      p <- sources
+      p <- sources if p.startsWith(dir)
       (line, n) <- Files.readAllLines(p).asScala.zipWithIndex
       pat <- patterns if line.contains(pat)
     } yield s"$p:${n + 1}: $pat"
@@ -39,6 +43,11 @@ class SessionContractGuardSpec extends AnyFunSuite {
       "experimental.extraOptimizations",
       "functionRegistry.createOrReplaceTempFunction",
       "functionRegistry.registerFunction"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("only Overlapped starts a thread in graft.etl") {
+    val found = hits("Overlapped.scala", Seq("new Thread("), under = "graft/etl")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

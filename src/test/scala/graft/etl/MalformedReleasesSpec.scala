@@ -54,6 +54,19 @@ class MalformedReleasesSpec extends SparkSpec {
     assert(msg.contains("Malformed release id=41"), msg)
   }
 
+  test("a failed singleFile conversion leaves neither its output nor its scratch dir") {
+    val input = dump("entity_single.xml.gz", good,
+      """<release id="46" status="Accepted"><title>a &bogus; b</title></release>""")
+    val output = new File(tmpDir, "entity_single.parquet")
+    val e = intercept[Exception] {
+      DiscogsReleases.run(spark, input.getAbsolutePath, output.getAbsolutePath, singleFile = true)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.toString.contains("Malformed release id=46")), e)
+    assert(!output.exists())
+    assert(!new File(output.getPath + "._graft_tmp").exists())
+  }
+
   test("a release split across two lines fails, naming the release") {
     val msg = failure(dump("split.xml.gz", good,
       """<release id="42" status="Accepted"><title>x</title>""",
