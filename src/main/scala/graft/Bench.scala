@@ -42,7 +42,6 @@ object Bench {
     // queries on a quiet machine without paying the full
     // 2×-the-surface bench. The driver never sets it.
     val nameFilter = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILTER", "")
-    val filterTerms = nameFilter.split(',').map(_.trim).filter(_.nonEmpty).toSeq
     // NAME ORDER, deterministically — `queries` is a HashMap, so its
     // iteration order reshuffles whenever the key set grows, and any
     // query that reuses a per-(session, dir) memoized artifact
@@ -52,14 +51,12 @@ object Bench {
     // measured 16 s where r18's order measured 3 s, on identical
     // code. Sorted order keeps warm/cold assignment identical from
     // round to round, so bench deltas mean code, not hashing.
+    val selected = SparkEntry.selected(nameFilter)
     def pass(): Seq[(String, Double, Boolean)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          filterTerms.isEmpty || filterTerms.exists(name.contains) }
-        .map { case (name, fn) =>
-          val (t, ok) = timed(name, fn)
-          (name, t, ok)
-        }
+      selected.map { q =>
+        val (t, ok) = timed(q.name, q.run)
+        (q.name, t, ok)
+      }
     val twoPass = pass().zip(pass()).map { case ((n, t1, ok1), (_, t2, ok2)) =>
       (n, if (ok1) t1 else -1.0, if (ok2) t2 else -1.0)
     }

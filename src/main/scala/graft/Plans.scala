@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev-only plan/timing instrument for the optimization rounds (guide
-  * §1: measure first). For each query whose name contains a filter
-  * term, runs it through the same noop-sink methodology as Bench and
+  * §1: measure first). For each query [[SparkEntry.selected]] picks
+  * (an empty filter picks all), runs it through the same noop-sink methodology as Bench and
   * captures EVERY executed physical plan (most operators materialize
   * internal frames — collect(), localCheckpoint, parquet round trips —
   * so the final frame's explain alone would miss the real work).
@@ -21,7 +21,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Plans {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
-    val filterTerms = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.builder().getOrCreate()
@@ -101,9 +100,8 @@ object Plans {
     }
     spark.listenerManager.register(listener)
 
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filterTerms.exists(n.contains) }
-    names.foreach { case (name, fn) =>
+    SparkEntry.selected(args(1)).foreach { q =>
+      val name = q.name
       current = name
       seq.set(0)
       jobs.set(0); stages.set(0); tasks.set(0)
@@ -112,7 +110,7 @@ object Plans {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
         // Listener bus is async: drain before reading phase totals so
         // this query's last executions are counted against it.

@@ -30,6 +30,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.run).toMap
 
+  /** The registry in name order, narrowed to the names containing any
+    * of the comma-separated terms of `filter`; an empty filter selects
+    * every query. The one query selection of Bench, Verify and Plans.
+    */
+  def selected(filter: String): Seq[Q] = {
+    val terms = filter.split(',').map(_.trim).filter(_.nonEmpty)
+    registry.sortBy(_.name)
+      .filter(q => terms.isEmpty || terms.exists(q.name.contains))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

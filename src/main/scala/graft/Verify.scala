@@ -12,8 +12,7 @@ object Verify {
     // Dev-only: restrict to queries whose name contains ANY of the
     // comma-separated filter terms — Bench's SPARK_GRAFT_BENCH_FILTER
     // semantics (the driver always calls with 2 args → full run).
-    val filterTerms = args.lift(2).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val filter = args.lift(2).getOrElse("")
     val spark = GraftSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     // Data-contract preflight: name any testdata drift up front (round
@@ -23,14 +22,11 @@ object Verify {
       case Seq() => System.err.println(s"[canary] data contract OK for $sfDir")
       case ps => ps.foreach(p => System.err.println(s"[canary] CONTRACT DRIFT: $p"))
     }
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        filterTerms.isEmpty || filterTerms.exists(name.contains) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.selected(filter).foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

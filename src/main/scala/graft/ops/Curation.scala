@@ -1682,8 +1682,7 @@ object Curation {
 
   /** c04's packing manifest from a (doc_id, source, text) frame —
     * 4096-token bins per source in doc_id order, running total via
-    * [[packedCum]]. Named so ScaleSmoke can drive it on scaled
-    * corpora.
+    * [[packedCum]].
     */
   def packingManifest(documents: DataFrame): DataFrame =
     packedCum(
@@ -1715,8 +1714,9 @@ object Curation {
     // totals ×2 via the self-join, the offset join, and tileSlices'
     // total + main) — materialize the ONE corpus-scale reduction once
     // or every branch re-runs the quality scan (measured 17.6 s → 3 s
-    // at ×20 in ScaleSmoke curation). The table is domain-bounded
-    // (≤ 1e6+1 six-dp values), so the checkpoint is tiny.
+    // at ×20: README "Measured dedup scaling"). The table is
+    // domain-bounded (≤ 1e6+1 six-dp values), so the checkpoint is
+    // tiny.
     val byVal = qv.groupBy("q").agg(count(lit(1)).as("cnt"))
       .withColumn("qb", floor(col("q") * 1000).cast("int"))
       .localCheckpoint()

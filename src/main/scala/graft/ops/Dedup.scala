@@ -380,8 +380,8 @@ object Dedup {
     * `maxBucket` bounds the quadratic in-bucket pair expansion against
     * adversarial skew: a band bucket holding b docs emits C(b,2)
     * candidates, so one bucket capturing 25% of an N-doc corpus makes
-    * the candidate stage Θ(N²) however rare such buckets are (measured
-    * in `ScaleSmoke skew` — see README "Adversarial bucket skew").
+    * the candidate stage Θ(N²) however rare such buckets are
+    * (measured: README "Adversarial bucket skew").
     * Buckets larger than the cap are dropped BEFORE expansion; such
     * buckets are near-certain clone families (only near-identical docs
     * collide on a full minhash band), which the linear keeper ops
@@ -419,7 +419,7 @@ object Dedup {
     // DuckDB oracle applies the identical hashing so the compare stays
     // exact), while the per-pair arrays shipped through the verify
     // join shrink ~3×. On dup-heavy corpora the verify join dominates
-    // d03 — see ScaleSmoke.
+    // d03 — see README "Adversarial bucket skew".
     val sh = sh0
       .groupBy("doc_id")
       .agg(collect_set(substring(md5(col("t")), 1, 16)).as("sl"))

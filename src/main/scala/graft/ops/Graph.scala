@@ -863,8 +863,8 @@ object Graph {
     * and a map-side-combining MAX folds H = max(min(cum, value)) —
     * the window's input is the value set, never the neighbor
     * multiset, so a hub neighborhood costs its value RANGE, not its
-    * degree (the skew-magnet fix of the r19 verdict, ScaleSmoke
-    * `kcore` measured). Value frames are node-sized and
+    * degree (the skew-magnet fix of the r19 verdict, measured in
+    * OPTIMIZATION_r20.md §8). Value frames are node-sized and
     * lineage-flattened every 3rd round. The h-index is invariant
     * under permutation of equal values, so neither the fold nor the
     * cumulation order reaches the result — both engines agree
@@ -894,9 +894,9 @@ object Graph {
     // count of the checkpointed node-sized frame.
     val n = core.count()
     for (it <- 1 to rounds) {
-      // H from DISTINCT neighbor values (r20, ScaleSmoke `kcore`
-      // evidence: ×5 data 16.4 s window form vs 14.4 s this form,
-      // ×1 flat): the neighbor-value multiset folds map-side to
+      // H from DISTINCT neighbor values (r20, OPTIMIZATION_r20.md §8:
+      // ×5 data 16.4 s window form vs 14.4 s this form, ×1 flat):
+      // the neighbor-value multiset folds map-side to
       // (dst, value) counts BEFORE any per-neighborhood ordering, so
       // the window's input is the distinct-value set, not every
       // neighbor row — the hub-neighborhood sort the row_number form

@@ -124,10 +124,8 @@ object Multimodal {
     decodedMemo(s, dir, Seq(Tables.path(dir, "documents")))(
       decodeDocs(Tables.load(s, dir, "documents")).localCheckpoint())
 
-  /** The un-memoized decode of an arbitrary (doc_id, text) frame —
-    * factored so ScaleSmoke can drive it on scaled corpora.
-    */
-  private[graft] def decodeDocs(documents: DataFrame): DataFrame = {
+  /** The un-memoized decode of an arbitrary (doc_id, text) frame. */
+  private def decodeDocs(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     documents
@@ -166,7 +164,7 @@ object Multimodal {
     * BLOCK KEY component by m07/m08. Features are exact
     * 1/128-multiples, so the sign test is integer-exact cross-engine.
     */
-  private[graft] def signCode: org.apache.spark.sql.Column =
+  private def signCode: org.apache.spark.sql.Column =
     (0 until 8).map(i =>
       when(element_at(col("v"), i + 1) >= 0, lit(1 << i))
         .otherwise(lit(0))).reduce(_ + _).cast("int")
@@ -775,9 +773,9 @@ object Multimodal {
         // pure projection; the 9× probe replication is a flat map
         // (linear); the self-join is an equi-join on the 65 k-key
         // block with per-block population ~N/65 536 on hash-uniform
-        // features (ScaleSmoke `multimodal` measures it at ×100 vs
-        // the old ≤256-key dims-only blocking); the best pair is one
-        // partitioned window over blocks.
+        // features (CHANGELOG round 13: max block 32 vs 2 096 at ×100
+        // under the old ≤256-key dims-only blocking); the best pair is
+        // one partitioned window over blocks.
         perceptualBestPairs(
           decodedFrame(s, dir)
             .select(col("doc_id"), col("width"), col("height"), col("v")))

@@ -29,13 +29,13 @@ object Relational2 {
     * with partial-combining aggregates, unioned into the long-form
     * report — profiling N columns = N cheap column scans, not one
     * scan carrying every column through an Expand. Measured
-    * (`ScaleSmoke q56`, 6M-row parquet, local[32], steady-state
-    * second pass): the 4 pruned scans run 1.61 s vs 19.6 s for the
-    * single-scan Expand variant (12×) — the Expand multiplies rows ×4
-    * before aggregating and its count-distinct shuffle carries every
-    * column's stringified values through one exchange, while each
-    * pruned branch reads one column and partial-aggregates at the
-    * scan. Values are rendered repr-safely: money through exact
+    * (README "Measured q56 profiling shape", 6M-row parquet,
+    * local[32], steady-state second pass): the 4 pruned scans run
+    * 1.61 s vs 19.6 s for the single-scan Expand variant (12×) — the
+    * Expand multiplies rows ×4 before aggregating and its
+    * count-distinct shuffle carries every column's stringified values
+    * through one exchange, while each pruned branch reads one column
+    * and partial-aggregates at the scan. Values are rendered repr-safely: money through exact
     * DECIMAL(12,2) strings, dates as ISO strings.
     */
   def columnProfile(li: DataFrame): DataFrame = {

@@ -110,8 +110,7 @@ object Similarity {
     * self-join is an equi-join shuffle on the bucket key, and the rank
     * filter is pushed below the shuffle by InferWindowGroupLimit.
     * `bits` trades recall for in-bucket pair count (quadratic in
-    * bucket population) — it must grow with the corpus; ScaleSmoke
-    * measures the trade on the SAME code s04 ships. Measured
+    * bucket population) — it must grow with the corpus. Measured
     * recall@3 ≥ 0.95 vs the exact baseline on SimilaritySpec's
     * planted-cluster corpus at bits = 4 (floor asserted there).
     * Input needs (vec_id, v: array<double>).
@@ -392,7 +391,7 @@ object Similarity {
     * Clustering here is the deterministic seed assignment
     * ([[seedCentroids]] + [[assignClusters]]) so the result is
     * bit-reproducible on both engines; a production run would iterate
-    * [[kmeansConvergeRounds]] first — the dedup step is unchanged.
+    * [[kmeansConverge]] first — the dedup step is unchanged.
     *
     * Scale shape: the pairwise step is quadratic only WITHIN a
     * cluster — the SemDeDup design point (k is sized so n/k pairs
@@ -597,19 +596,11 @@ object Similarity {
     * a cluster. Exact-fixpoint early exit is oracle-safe: once means
     * repeat bit-for-bit, every further iteration reproduces them.
     * Returns the final round's (cluster, dim, n_members, cx).
+    * Per-round cost at ×1 → ×100 corpus: README "Measured similarity
+    * scaling".
     */
   def kmeansConverge(
-      e0: DataFrame, maxIter: Int = 10, eps: Double = 0.0): DataFrame =
-    kmeansConvergeRounds(e0, maxIter, eps)._1
-
-  /** [[kmeansConverge]] plus the number of Lloyd rounds actually run —
-    * the ScaleSmoke `sim` mode reports rounds and per-round time
-    * separately (total time alone can't distinguish "more data per
-    * round" from "more rounds to converge").
-    */
-  def kmeansConvergeRounds(
-      e0: DataFrame, maxIter: Int = 10, eps: Double = 0.0)
-      : (DataFrame, Int) = {
+      e0: DataFrame, maxIter: Int = 10, eps: Double = 0.0): DataFrame = {
     require(maxIter >= 1, s"need at least one iteration, got $maxIter")
     val e = e0.localCheckpoint()
     var cent = seedCentroids(e).coalesce(1).localCheckpoint()
@@ -636,7 +627,7 @@ object Similarity {
     // them live as long as the caller holds the result.
     freeCheckpoint(e)
     freeCheckpoint(cent)
-    (means, i)
+    means
   }
 
   /** DuckDB restatement of [[kmeansConverge]] at a PINNED iteration
@@ -998,9 +989,9 @@ object Similarity {
     * frame; the vectors need NOT be corpus members — pass
     * `excludeSelf = false` for such external queries (the default
     * `true` drops the row whose corpus vec_id equals qid, the
-    * corpus-member-query convention s08 uses). ScaleSmoke times this
-    * separately from training so the ADC scaling numbers measure
-    * search, not retraining.
+    * corpus-member-query convention s08 uses). Kept apart from
+    * training so search scales on its own: README "Measured similarity
+    * scaling" has the ADC search flat at ×1 → ×100 corpus.
     */
   def pqAdcSearch(
       queries: DataFrame, cent: DataFrame, codes: DataFrame,
@@ -1460,8 +1451,9 @@ object Similarity {
     ivfSq8Artifacts(spark, dir, embSources(dir))(ivfSq8Train(e))
 
   /** The un-memoized IVF-SQ8 build — (centroids, labeled codes),
-    * both checkpointed. ScaleSmoke times this separately from the
-    * search it serves.
+    * both checkpointed. Timed apart from the search it serves in
+    * README "Measured similarity scaling" (build 1.1 s → 6.2 s at
+    * ×100 corpus).
     */
   def ivfSq8Train(e: DataFrame): (DataFrame, DataFrame) = {
     val centroids = seedCentroids(e).coalesce(1).localCheckpoint()
@@ -1504,7 +1496,8 @@ object Similarity {
     // never opened. Deliberately NOT left to dynamic partition
     // pruning: Spark's DPP cost heuristic planned the pruning
     // subquery away to dynamicpruningexpression(true) — a full scan —
-    // on exactly this join (measured in ScaleSmoke lifecycle), and a
+    // on exactly this join (README "Round-16 gates and notes",
+    // "Serve-path pruning made real"), and a
     // serve path must not depend on an optimizer estimate for its
     // core cost bound.
     val probedLabels = probe.select(col("probe_label")).distinct()
@@ -3277,8 +3270,7 @@ object Similarity {
         // The codes sequence ships as a scalar md5 digest (the
         // EtlParity repr-safe convention — the driver's comparator
         // hash-sorts cells, so no nested columns in oracle output);
-        // [[indexAppend]] itself keeps the raw array for spec /
-        // ScaleSmoke use.
+        // [[indexAppend]] itself keeps the raw array for specs.
         val e = emb(s, dir)
         indexAppend(
             base = e.filter(col("vec_id") % 10 =!= 0),

@@ -396,7 +396,7 @@ object EmbeddingStream {
     // PartitionFilters and an unprobed cell is a directory never
     // opened — guaranteed, not left to the DPP cost heuristic
     // (which planned this exact join's pruning subquery away to a
-    // no-op; measured in ScaleSmoke lifecycle).
+    // no-op; README "Round-16 gates and notes").
     val probedCells = probe.select(col("probe_label")).distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ 2·|queries| cells
     val pruned =

@@ -59,11 +59,8 @@ object EventStream {
     * plenty of parallelism and ~4× less commit overhead than the
     * session's batch setting. A real deployment sizes this to
     * state-rows/partition, not to the batch shuffle width.
-    * (`private[graft]`: ScaleSmoke's stream modes need the same
-    * discipline — a 32-partition state store commits 4× the stores to
-    * hold the same ~100 rows.)
     */
-  private[graft] def withStreamShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
+  private[streaming] def withStreamShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, n.toString)
@@ -145,9 +142,9 @@ object EventStream {
 
   /** Latest total state-store row count reported by `q`'s (single)
     * stateful operator, or -1 before any stateful progress — the one
-    * progress-sampling idiom shared by the ScaleSmoke stream modes and
-    * EventStreamSpec's state-bound assertion. `numRowsTotal` sums over
-    * partitions, so the value is partition-count-independent.
+    * progress-sampling idiom of the streaming specs' state-bound
+    * assertions. `numRowsTotal` sums over partitions, so the value is
+    * partition-count-independent.
     */
   private[graft] def lastStateRows(
       q: org.apache.spark.sql.streaming.StreamingQuery): Long =
@@ -1662,8 +1659,9 @@ object EventStream {
     * equilibrium means the 0.85 contraction only has to close the
     * DELTA's perturbation — the steady-state daily cost is
     * `deltaIters` rounds plus one rank-store read, never the cold
-    * `baseIters` recompute (ScaleSmoke `incpr` meters exactly this
-    * for q89; the spec's stream≡batch compare pins the cadence).
+    * `baseIters` recompute (measured for q89 at ×5: seeded 4.2 s vs
+    * cold 8.8 s, README "Round-18 gates and notes"; the spec's
+    * stream≡batch compare pins the cadence).
     *
     * Replay/restart: pair commits are KEYED BY batchId and rewritten
     * in place (the st28/SigStoreLake rule) — a failure-retried batch
@@ -1860,8 +1858,8 @@ object EventStream {
 
   /** st23's emission: funnel stage flags recomputed from full state,
     * with the monotone per-user event counter the drain orders by and
-    * the retained-buffer size (clicks + purchases held in state) the
-    * ScaleSmoke `funnel` mode measures the horizon bound with.
+    * the retained-buffer size (clicks + purchases held in state), the
+    * meter of the horizon bound.
     */
   final case class FunnelRow(
       user_id: Long, n_seen: Long, v_ok: Int, c_ok: Int, p_ok: Int,
@@ -1882,11 +1880,10 @@ object EventStream {
     * argument bounds purchases at v + 48h + 7d (the deepest any
     * qualifying click's window can reach). State per user is thus
     * the events inside the user's own conversion horizon — O(funnel
-    * window), not O(stream); ScaleSmoke's `funnel` mode measures the
-    * plateau. The emitted verdict is recomputed from the retained
-    * sets each batch, so the LAST emission per user (max n_seen — a
-    * strictly-increasing counter) is the stream's fixpoint and
-    * equals the batch q66 statement exactly.
+    * window), not O(stream). The emitted verdict is recomputed from
+    * the retained sets each batch, so the LAST emission per user
+    * (max n_seen — a strictly-increasing counter) is the stream's
+    * fixpoint and equals the batch q66 statement exactly.
     */
   def windowedFunnel(ds: Dataset[(Long, String, Long)])
       : Dataset[FunnelRow] = {

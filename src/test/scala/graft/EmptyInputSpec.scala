@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Resilience: every query must survive EMPTY tables (at 100 TB,
   * empty partitions and empty filter results are routine — an
   * array_min/first/head that assumes rows exist would throw there).
@@ -10,7 +8,7 @@ import java.nio.file.Files
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("empty-sf").toFile.getAbsolutePath
+    val dir = tempDir("empty-sf").toFile.getAbsolutePath
     Tables.names.foreach { n =>
       val src = Tables.load(spark, "/root/testdata/sf0.001", n)
       // limit(0) keeps the exact schema; events needs the RAW (ns as

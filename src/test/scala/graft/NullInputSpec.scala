@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Resilience: queries must survive NULLs in nullable payload columns
@@ -12,7 +10,7 @@ import org.apache.spark.sql.functions._
 class NullInputSpec extends SparkSpec {
 
   private lazy val nullDir: String = {
-    val dir = Files.createTempDirectory("null-sf").toFile.getAbsolutePath
+    val dir = tempDir("null-sf").toFile.getAbsolutePath
     Tables.names.foreach { n =>
       val base =
         if (n == "events")

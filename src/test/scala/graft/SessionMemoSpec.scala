@@ -24,7 +24,7 @@ class SessionMemoSpec extends SparkSpec {
     * one per test so no test sees another's rewrite.
     */
   private def copyOfTestdata(): String = {
-    val d = SourceSinks.tmp("graft_memo").toPath
+    val d = tempDir("graft_memo")
     Files.list(Paths.get("/root/testdata/sf0.001")).iterator().asScala
       .foreach(p => Files.copy(p, d.resolve(p.getFileName)))
     d.toString
@@ -158,7 +158,7 @@ class SessionMemoSpec extends SparkSpec {
   test("the entries of a stopped session are dropped") {
     // Stopping a session stops the JVM's one SparkContext, which every
     // spec shares, so the scenario runs in a JVM of its own.
-    val out = Files.createTempFile("graft_memo_stopped", ".log")
+    val out = tempDir("graft_memo_stopped").resolve("child.log")
     val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments
       .asScala.filterNot(_.startsWith("-Xmx"))
     val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++
@@ -171,10 +171,7 @@ class SessionMemoSpec extends SparkSpec {
       val log = new String(Files.readAllBytes(out))
       assert(p.exitValue == 0, log)
       assert(log.linesIterator.contains("entries before=2 after=1"), log)
-    } finally {
-      p.destroyForcibly()
-      Files.deleteIfExists(out)
-    }
+    } finally p.destroyForcibly()
   }
 }
 

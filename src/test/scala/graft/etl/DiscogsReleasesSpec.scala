@@ -15,7 +15,7 @@ import graft.SparkSpec
   */
 class DiscogsReleasesSpec extends SparkSpec {
 
-  private lazy val tmpDir = Files.createTempDirectory("discogs-spec").toFile
+  private lazy val tmpDir = tempDir("discogs-spec").toFile
 
   /** Gzip the checked-in fixture into a temp .xml.gz (exercises the
     * reference's S1 gzip source path).

@@ -13,7 +13,7 @@ import graft.SparkSpec
   */
 class MalformedReleasesSpec extends SparkSpec {
 
-  private lazy val tmpDir = Files.createTempDirectory("malformed-spec").toFile
+  private lazy val tmpDir = tempDir("malformed-spec").toFile
 
   private val good =
     """<release id="40" status="Accepted"><title>ok</title><artists></artists><genres></genres><styles></styles><labels></labels></release>"""

@@ -23,7 +23,7 @@ import graft.SparkSpec
   */
 class OverlappedSpec extends SparkSpec {
 
-  private lazy val tmpDir = graft.ops.SourceSinks.tmp("overlapped-spec")
+  private lazy val tmpDir = tempDir("overlapped-spec").toFile
 
   private val n = 5000
 

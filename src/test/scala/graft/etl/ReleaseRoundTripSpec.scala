@@ -2,7 +2,6 @@ package graft.etl
 
 import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.Row
@@ -92,7 +91,7 @@ class ReleaseRoundTripSpec extends SparkSpec {
     val xml = "<releases>\n" +
       releases.map(serialize).mkString("\n") + "\n</releases>\n"
 
-    val tmp = Files.createTempDirectory("roundtrip").toFile
+    val tmp = tempDir("roundtrip").toFile
     val gz = new File(tmp, "gen.xml.gz")
     val out = new GZIPOutputStream(new FileOutputStream(gz))
     try out.write(xml.getBytes(StandardCharsets.UTF_8)) finally out.close()

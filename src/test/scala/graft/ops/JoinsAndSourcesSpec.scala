@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -13,7 +11,7 @@ import graft.{SparkSpec, Tables}
 class JoinsAndSourcesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val tmp = Files.createTempDirectory("graft-sources").toFile
+  private lazy val tmp = tempDir("graft-sources").toFile
 
   test("csv round-trip preserves documents") {
     val docs = Tables.load(spark, dir, "documents")
@@ -257,96 +255,87 @@ class JoinsAndSourcesSpec extends SparkSpec {
 
   test("q75: after the vacuum the directory holds EXACTLY the " +
       "manifest — one live file per bucket, zero orphans left") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_q75_spec").toFile
-    try {
-      val out = SourceSinks.lakeVacuum(spark, dir,
-        new java.io.File(base, "lake").getAbsolutePath).collect()
-      // Non-vacuous: some bucket was rewritten and vacuumed.
-      assert(out.map(_.getLong(4)).sum > 0, "no orphan was ever created")
-      // Physical truth: walk the directory — every bucket dir must
-      // hold exactly ONE parquet file (the orphan really was deleted,
-      // the live file really wasn't).
-      val lakeDir = new java.io.File(base, "lake")
-      val perBucket = lakeDir.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName ->
-          d.listFiles().count(_.getName.endsWith(".parquet")))
-      assert(perBucket.nonEmpty)
-      perBucket.foreach { case (b, n) =>
-        assert(n == 1, s"$b holds $n parquet files, want 1")
-      }
-      assert(perBucket.length == out.length,
-        s"${perBucket.length} bucket dirs vs ${out.length} output rows")
-      // And the reported files_live agrees with the filesystem.
-      assert(out.map(_.getLong(3)).sum == perBucket.length)
-    } finally SourceSinks.deleteRecursively(base)
+    val base = tempDir("graft_q75_spec").toFile
+    val out = SourceSinks.lakeVacuum(spark, dir,
+      new java.io.File(base, "lake").getAbsolutePath).collect()
+    // Non-vacuous: some bucket was rewritten and vacuumed.
+    assert(out.map(_.getLong(4)).sum > 0, "no orphan was ever created")
+    // Physical truth: walk the directory — every bucket dir must
+    // hold exactly ONE parquet file (the orphan really was deleted,
+    // the live file really wasn't).
+    val lakeDir = new java.io.File(base, "lake")
+    val perBucket = lakeDir.listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .map(d => d.getName ->
+        d.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(perBucket.nonEmpty)
+    perBucket.foreach { case (b, n) =>
+      assert(n == 1, s"$b holds $n parquet files, want 1")
+    }
+    assert(perBucket.length == out.length,
+      s"${perBucket.length} bucket dirs vs ${out.length} output rows")
+    // And the reported files_live agrees with the filesystem.
+    assert(out.map(_.getLong(3)).sum == perBucket.length)
   }
 
   test("q76: the v2 commit APPENDS — every v1 file survives on disk, " +
       "and snapshots disagree exactly where buckets were rewritten") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_q76_spec").toFile
-    try {
-      val out = SourceSinks.timeTravelRead(spark, dir,
-        new java.io.File(base, "lake").getAbsolutePath).collect()
-        .map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getLong(2), r.getDouble(3)))).toMap
-      val v1 = out.collect { case (("v1", b), v) => b -> v }
-      val v2 = out.collect { case (("v2", b), v) => b -> v }
-      // Copy-on-write: v1 buckets can only gain in v2, never vanish.
-      assert(v1.keySet.subsetOf(v2.keySet), s"v1 ${v1.keySet} v2 ${v2.keySet}")
-      // The commit did something: some shared bucket changed state.
-      assert(v1.exists { case (b, v) => v2(b) != v },
-        "no bucket differs between snapshots — commit vacuous")
-      // Physical truth: rewritten buckets hold BOTH commits' files
-      // (nothing was deleted); at least one dir carries two files.
-      val perBucket = new java.io.File(base, "lake").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-      assert(perBucket.forall(n => n == 1 || n == 2), perBucket.toSeq)
-      assert(perBucket.exists(_ == 2), "append left no second file")
-    } finally SourceSinks.deleteRecursively(base)
+    val base = tempDir("graft_q76_spec").toFile
+    val out = SourceSinks.timeTravelRead(spark, dir,
+      new java.io.File(base, "lake").getAbsolutePath).collect()
+      .map(r => (r.getString(0), r.getInt(1)) ->
+        ((r.getLong(2), r.getDouble(3)))).toMap
+    val v1 = out.collect { case (("v1", b), v) => b -> v }
+    val v2 = out.collect { case (("v2", b), v) => b -> v }
+    // Copy-on-write: v1 buckets can only gain in v2, never vanish.
+    assert(v1.keySet.subsetOf(v2.keySet), s"v1 ${v1.keySet} v2 ${v2.keySet}")
+    // The commit did something: some shared bucket changed state.
+    assert(v1.exists { case (b, v) => v2(b) != v },
+      "no bucket differs between snapshots — commit vacuous")
+    // Physical truth: rewritten buckets hold BOTH commits' files
+    // (nothing was deleted); at least one dir carries two files.
+    val perBucket = new java.io.File(base, "lake").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(perBucket.forall(n => n == 1 || n == 2), perBucket.toSeq)
+    assert(perBucket.exists(_ == 2), "append left no second file")
   }
 
   test("q79: OPTIMIZE shrinks the file count, leaves the pre-compaction " +
       "manifest readable byte-for-byte, and vacuum reclaims only v1") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_q79_spec").toFile
-    try {
-      val (out, v1, v2) = SourceSinks.lakeOptimizeFull(spark, dir,
-        base.getAbsolutePath)
-      val rows = out.collect()
-      val pre = rows.filter(_.getString(0) == "pre")
-      val post = rows.filter(_.getString(0) == "post")
-      // Lossless rewrite: identical per-bucket content either side.
-      assert(pre.map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .toSet ==
-        post.map(r => (r.getInt(1), r.getLong(2), r.getDouble(3))).toSet)
-      // The point of the job: strictly fewer files, and the input
-      // really was a small-file lake (more files than buckets).
-      assert(v1.length > pre.length, s"v1 not small-file: ${v1.length}")
-      assert(v2.length < v1.length,
-        s"no compaction: ${v1.length} -> ${v2.length}")
-      // Time travel: the v1 manifest still reads EXACTLY the same
-      // state after the rewrite (the commit only added files).
-      val v1Again = spark.read
-        .option("basePath", new java.io.File(base, "data1").getAbsolutePath)
-        .schema(SourceSinks.lakeSchema).parquet(v1.map(_._2).toSeq: _*)
-      assert(v1Again.count() == pre.map(_.getLong(2)).sum)
-      // Vacuum after the swap: delete the superseded v1 files; the
-      // v2 manifest must be untouched and still serve full content.
-      v1.foreach { case (_, p) =>
-        val hp = new org.apache.hadoop.fs.Path(new java.net.URI(p))
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(hp, false)
-      }
-      val v2After = spark.read
-        .option("basePath", new java.io.File(base, "data2").getAbsolutePath)
-        .schema(SourceSinks.lakeSchema + ", bin INT")
-        .parquet(v2.map(_._2).toSeq: _*)
-      assert(v2After.count() == post.map(_.getLong(2)).sum)
-    } finally SourceSinks.deleteRecursively(base)
+    val base = tempDir("graft_q79_spec").toFile
+    val (out, v1, v2) = SourceSinks.lakeOptimizeFull(spark, dir,
+      base.getAbsolutePath)
+    val rows = out.collect()
+    val pre = rows.filter(_.getString(0) == "pre")
+    val post = rows.filter(_.getString(0) == "post")
+    // Lossless rewrite: identical per-bucket content either side.
+    assert(pre.map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
+      .toSet ==
+      post.map(r => (r.getInt(1), r.getLong(2), r.getDouble(3))).toSet)
+    // The point of the job: strictly fewer files, and the input
+    // really was a small-file lake (more files than buckets).
+    assert(v1.length > pre.length, s"v1 not small-file: ${v1.length}")
+    assert(v2.length < v1.length,
+      s"no compaction: ${v1.length} -> ${v2.length}")
+    // Time travel: the v1 manifest still reads EXACTLY the same
+    // state after the rewrite (the commit only added files).
+    val v1Again = spark.read
+      .option("basePath", new java.io.File(base, "data1").getAbsolutePath)
+      .schema(SourceSinks.lakeSchema).parquet(v1.map(_._2).toSeq: _*)
+    assert(v1Again.count() == pre.map(_.getLong(2)).sum)
+    // Vacuum after the swap: delete the superseded v1 files; the
+    // v2 manifest must be untouched and still serve full content.
+    v1.foreach { case (_, p) =>
+      val hp = new org.apache.hadoop.fs.Path(new java.net.URI(p))
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(hp, false)
+    }
+    val v2After = spark.read
+      .option("basePath", new java.io.File(base, "data2").getAbsolutePath)
+      .schema(SourceSinks.lakeSchema + ", bin INT")
+      .parquet(v2.map(_._2).toSeq: _*)
+    assert(v2After.count() == post.map(_.getLong(2)).sum)
   }
 
   test("q80: two nations that never trade across form exactly two " +
@@ -558,8 +547,7 @@ class JoinsAndSourcesSpec extends SparkSpec {
 
   test("q82: the stale writer's CAS physically fails, its files would " +
       "have lost the winner's updates, and the rebase restores them") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_q82_spec").toFile
+    val base = tempDir("graft_q82_spec").toFile
     // Engineered feed: user 16 (bucket 0) gets its LATEST event in
     // writer A's window while user 24 (also bucket 0) gets one in
     // writer B's window — so bucket 0 is co-touched, and B's stale
@@ -580,46 +568,40 @@ class JoinsAndSourcesSpec extends SparkSpec {
           .as("ts"),
         col("user_id"), col("event_type"), col("value"),
         org.apache.spark.sql.functions.lit("{}").as("props"))
-    val evDir = java.nio.file.Files
-      .createTempDirectory("graft_q82_events").toFile
+    val evDir = tempDir("graft_q82_events").toFile
     ev.coalesce(1).write.mode("overwrite")
       .parquet(new java.io.File(evDir, "events.parquet").getAbsolutePath)
-    try {
-      val (out, staleB, conflicted) = SourceSinks.lakeOptimisticFull(
-        spark, evDir.getAbsolutePath, base.getAbsolutePath)
-      assert(conflicted, "writer B's first CAS unexpectedly won")
-      // The ledger carries exactly the three claimed versions.
-      val versions = new java.io.File(base, "_versions").listFiles()
-        .map(_.getName).toSet
-      assert(versions == Set("v1", "v2", "v3"), versions)
-      // The stale files are REAL (B wrote them before losing) ...
-      assert(staleB.nonEmpty)
-      val staleAgg = SourceSinks.readManifest(spark,
-          staleB.map(f => (0, f)))
-        .groupBy("bucket")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum(col("value")
-            .cast("decimal(12,2)")).cast("double").as("tv"))
-        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2))))
-        .toMap
-      // ... and differ from the committed v3 state on at least one
-      // co-touched bucket: the lost update the rebase prevented.
-      val v3Agg = out.collect()
-        .filter(_.getString(0) == "v3")
-        .map(r => r.getInt(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
-      val diffs = staleAgg.keys.filter(b => v3Agg(b) != staleAgg(b))
-      assert(diffs.nonEmpty,
-        s"stale B state equals v3 — the conflict was vacuous: $staleAgg")
-      // The exact anomaly: bucket 0's stale state carries user 16's
-      // BASE value (10 + B's 40 = 50 total), the rebased v3 carries
-      // A's update (30 + 40 = 70).
-      assert(staleAgg(0) == ((2L, 50.0)), staleAgg)
-      assert(v3Agg(0) == ((2L, 70.0)), v3Agg)
-    } finally {
-      SourceSinks.deleteRecursively(base)
-      SourceSinks.deleteRecursively(evDir)
-    }
+    val (out, staleB, conflicted) = SourceSinks.lakeOptimisticFull(
+      spark, evDir.getAbsolutePath, base.getAbsolutePath)
+    assert(conflicted, "writer B's first CAS unexpectedly won")
+    // The ledger carries exactly the three claimed versions.
+    val versions = new java.io.File(base, "_versions").listFiles()
+      .map(_.getName).toSet
+    assert(versions == Set("v1", "v2", "v3"), versions)
+    // The stale files are REAL (B wrote them before losing) ...
+    assert(staleB.nonEmpty)
+    val staleAgg = SourceSinks.readManifest(spark,
+        staleB.map(f => (0, f)))
+      .groupBy("bucket")
+      .agg(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"),
+        org.apache.spark.sql.functions.sum(col("value")
+          .cast("decimal(12,2)")).cast("double").as("tv"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2))))
+      .toMap
+    // ... and differ from the committed v3 state on at least one
+    // co-touched bucket: the lost update the rebase prevented.
+    val v3Agg = out.collect()
+      .filter(_.getString(0) == "v3")
+      .map(r => r.getInt(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
+    val diffs = staleAgg.keys.filter(b => v3Agg(b) != staleAgg(b))
+    assert(diffs.nonEmpty,
+      s"stale B state equals v3 — the conflict was vacuous: $staleAgg")
+    // The exact anomaly: bucket 0's stale state carries user 16's
+    // BASE value (10 + B's 40 = 50 total), the rebased v3 carries
+    // A's update (30 + 40 = 70).
+    assert(staleAgg(0) == ((2L, 50.0)), staleAgg)
+    assert(v3Agg(0) == ((2L, 70.0)), v3Agg)
   }
 
   test("q81: teleport mass stays in the seed component — a component " +
@@ -798,7 +780,7 @@ class JoinsAndSourcesSpec extends SparkSpec {
   test("q90/q91 avro: the container round-trips snappy-compressed " +
       "blocks, and reader-schema resolution drops, reorders and " +
       "defaults fields inside the avro decoder") {
-    val d = java.nio.file.Files.createTempDirectory("avro_spec_")
+    val d = tempDir("avro_spec_")
     val f = new java.io.File(d.toFile, "p0.avro")
     AvroCodec.writePartition(f, Iterator(
       (1L, "BUILDING", 12345L), (2L, "MACHINERY", -50L)))

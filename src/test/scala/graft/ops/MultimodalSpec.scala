@@ -9,121 +9,100 @@ class MultimodalSpec extends SparkSpec {
   test("m05: same-size blocking pairs docs; exact payload clones flag is_dup") {
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m05spec").toFile
-    try {
-      Seq(
-        (1L, "hello world"), // 11 bytes
-        (2L, "hello world"), // exact clone -> cos 1.0
-        (3L, "jello wurld"), // same LENGTH, different content
-        (4L, "tiny")) // different length: never blocked
-        .toDF("doc_id", "text")
-        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-        .withColumn("source", org.apache.spark.sql.functions.lit("src1"))
-        .withColumn("n_chars",
-          org.apache.spark.sql.functions.length(col("text")).cast("long"))
-        .write.mode("overwrite")
-        .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-      val out = graft.SparkEntry
-        .queries("m05_feature_neardup")(spark, dir.getAbsolutePath)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) ->
-          ((r.getDouble(3), r.getInt(4)))).toMap
-      // all three 11-byte docs pair up; only the true clone flags
-      assert(out.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)), out)
-      assert(out((1L, 2L)) == ((1.0, 1)), out)
-      assert(out((1L, 3L))._2 == 0 && out((2L, 3L))._2 == 0, out)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    val dir = tempDir("m05spec").toFile
+    Seq(
+      (1L, "hello world"), // 11 bytes
+      (2L, "hello world"), // exact clone -> cos 1.0
+      (3L, "jello wurld"), // same LENGTH, different content
+      (4L, "tiny")) // different length: never blocked
+      .toDF("doc_id", "text")
+      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+      .withColumn("source", org.apache.spark.sql.functions.lit("src1"))
+      .withColumn("n_chars",
+        org.apache.spark.sql.functions.length(col("text")).cast("long"))
+      .write.mode("overwrite")
+      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
+    val out = graft.SparkEntry
+      .queries("m05_feature_neardup")(spark, dir.getAbsolutePath)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getDouble(3), r.getInt(4)))).toMap
+    // all three 11-byte docs pair up; only the true clone flags
+    assert(out.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)), out)
+    assert(out((1L, 2L)) == ((1.0, 1)), out)
+    assert(out((1L, 3L))._2 == 0 && out((2L, 3L))._2 == 0, out)
   }
 
   test("m06: per-source card counts volume, formats, exact dups and near-dups") {
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m06spec").toFile
-    try {
-      // srcA: an exact clone pair (dup_docs=1, both near-dup) + one
-      // odd-length doc; srcB: two distinct same-length payloads (a
-      // blocked pair that does NOT flag) + a null payload (skipped).
-      Seq(
-        (1L, "hello world", "srcA"),
-        (2L, "hello world", "srcA"), // exact clone of 1
-        (3L, "tiny", "srcA"),
-        (4L, "jello wurld", "srcB"), // same length as 1/2, diff bytes
-        (5L, "mello warld", "srcB"),
-        (6L, null.asInstanceOf[String], "srcB"))
-        .toDF("doc_id", "text", "source")
-        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-        .withColumn("n_chars",
-          org.apache.spark.sql.functions.length(col("text")).cast("long"))
-        .write.mode("overwrite")
-        .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-      val out = graft.SparkEntry
-        .queries("m06_multimodal_data_card")(spark, dir.getAbsolutePath)
-        .collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-            r.getLong(5)))).toMap
-      // (n_payloads, total_bytes, n_formats, dup_docs, near_dup_docs)
-      val a = out("srcA")
-      assert(a._1 == 3 && a._2 == 11 + 11 + 4, a)
-      // clones share one format; doc 3 adds another unless its hash
-      // dims collide -> 1..2
-      assert(a._3 >= 1 && a._3 <= 2, a)
-      assert(a._4 == 1, a) // one exact dup (the clone)
-      assert(a._5 == 2, a) // both clone members are near-dup docs
-      val b = out("srcB")
-      assert(b._1 == 2 && b._2 == 22, b) // null payload skipped
-      assert(b._4 == 0, b)
-      // 4/5 pair with 1/2 by length but hash features ~never reach
-      // 0.999 for different payloads; 4-vs-5 likewise
-      assert(b._5 == 0, b)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    val dir = tempDir("m06spec").toFile
+    // srcA: an exact clone pair (dup_docs=1, both near-dup) + one
+    // odd-length doc; srcB: two distinct same-length payloads (a
+    // blocked pair that does NOT flag) + a null payload (skipped).
+    Seq(
+      (1L, "hello world", "srcA"),
+      (2L, "hello world", "srcA"), // exact clone of 1
+      (3L, "tiny", "srcA"),
+      (4L, "jello wurld", "srcB"), // same length as 1/2, diff bytes
+      (5L, "mello warld", "srcB"),
+      (6L, null.asInstanceOf[String], "srcB"))
+      .toDF("doc_id", "text", "source")
+      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+      .withColumn("n_chars",
+        org.apache.spark.sql.functions.length(col("text")).cast("long"))
+      .write.mode("overwrite")
+      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
+    val out = graft.SparkEntry
+      .queries("m06_multimodal_data_card")(spark, dir.getAbsolutePath)
+      .collect()
+      .map(r => r.getString(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+          r.getLong(5)))).toMap
+    // (n_payloads, total_bytes, n_formats, dup_docs, near_dup_docs)
+    val a = out("srcA")
+    assert(a._1 == 3 && a._2 == 11 + 11 + 4, a)
+    // clones share one format; doc 3 adds another unless its hash
+    // dims collide -> 1..2
+    assert(a._3 >= 1 && a._3 <= 2, a)
+    assert(a._4 == 1, a) // one exact dup (the clone)
+    assert(a._5 == 2, a) // both clone members are near-dup docs
+    val b = out("srcB")
+    assert(b._1 == 2 && b._2 == 22, b) // null payload skipped
+    assert(b._4 == 0, b)
+    // 4/5 pair with 1/2 by length but hash features ~never reach
+    // 0.999 for different payloads; 4-vs-5 likewise
+    assert(b._5 == 0, b)
   }
 
   test("m07: perceptual blocking needs no byte-length match; only true clones emit") {
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("m07spec").toFile
-    try {
-      Seq(
-        (1L, "hello world"),
-        (2L, "hello world"), // clone: same dims, same sign code, cos 1.0
-        (3L, "jello wurld"), // same byte LENGTH, different content
-        (4L, "tiny"))
-        .toDF("doc_id", "text")
-        .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-        .withColumn("source", org.apache.spark.sql.functions.lit("src1"))
-        .withColumn("n_chars",
-          org.apache.spark.sql.functions.length(col("text")).cast("long"))
-        .write.mode("overwrite")
-        .parquet(s"${dir.getAbsolutePath}/documents.parquet")
-      val rows = graft.SparkEntry
-        .queries("m07_perceptual_neardup")(spark, dir.getAbsolutePath)
-        .collect()
-        .map(r => ((r.getLong(3), r.getLong(4)),
-          (r.getInt(5), r.getDouble(6), r.getInt(7))))
-      // the clone pair tops its format block: cos 1.0, matching sign
-      // codes, flagged dup — blocked WITHOUT any byte-length key
-      val clone = rows.toMap.get((1L, 2L))
-      assert(clone.contains((1, 1.0, 1)), rows.toSeq)
-      // no other best-pair reaches the dup verdict (same-length noise
-      // included): only byte-exact content flags
-      assert(rows.count(_._2._3 == 1) == 1, rows.toSeq)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    val dir = tempDir("m07spec").toFile
+    Seq(
+      (1L, "hello world"),
+      (2L, "hello world"), // clone: same dims, same sign code, cos 1.0
+      (3L, "jello wurld"), // same byte LENGTH, different content
+      (4L, "tiny"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+      .withColumn("source", org.apache.spark.sql.functions.lit("src1"))
+      .withColumn("n_chars",
+        org.apache.spark.sql.functions.length(col("text")).cast("long"))
+      .write.mode("overwrite")
+      .parquet(s"${dir.getAbsolutePath}/documents.parquet")
+    val rows = graft.SparkEntry
+      .queries("m07_perceptual_neardup")(spark, dir.getAbsolutePath)
+      .collect()
+      .map(r => ((r.getLong(3), r.getLong(4)),
+        (r.getInt(5), r.getDouble(6), r.getInt(7))))
+    // the clone pair tops its format block: cos 1.0, matching sign
+    // codes, flagged dup — blocked WITHOUT any byte-length key
+    val clone = rows.toMap.get((1L, 2L))
+    assert(clone.contains((1, 1.0, 1)), rows.toSeq)
+    // no other best-pair reaches the dup verdict (same-length noise
+    // included): only byte-exact content flags
+    assert(rows.count(_._2._3 == 1) == 1, rows.toSeq)
   }
 
   test("m07 multi-probe: Hamming-1 sign pairs collide exactly once; Hamming-2 never") {
@@ -282,7 +261,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'srcX' AS source",
         "length(text) AS n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("m11-spec")
+    val dir = tempDir("m11-spec")
       .toFile.getAbsolutePath
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = graft.SparkEntry

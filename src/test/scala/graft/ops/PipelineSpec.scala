@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** Behavioral pins for the composed pipelines (plan shapes live in
@@ -39,7 +37,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'srcX' AS source",
         "length(text) AS n_chars")
-    val dir = Files.createTempDirectory("p08-spec").toFile.getAbsolutePath
+    val dir = tempDir("p08-spec").toFile.getAbsolutePath
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("p08_admission_gate")(spark, dir)
       .collect()
@@ -79,7 +77,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'srcX' AS source",
         "length(text) AS n_chars")
-    val dir = Files.createTempDirectory("p09-spec").toFile.getAbsolutePath
+    val dir = tempDir("p09-spec").toFile.getAbsolutePath
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("p09_gated_release")(spark, dir).collect()
     assert(rows.length === 1, s"one source expected: ${rows.toSeq}")

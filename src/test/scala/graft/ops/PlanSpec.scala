@@ -1000,8 +1000,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("p06: a filtered read of the release prunes source partitions") {
-    val path = new java.io.File(
-      SourceSinks.tmp("graft_p06spec"), "release").getAbsolutePath
+    val path = tempDir("graft_p06spec").resolve("release").toString
     val docs = graft.Tables.load(spark, dir, "documents")
     Pipeline.releaseManifest(spark, docs, path)
       .write.format("noop").mode("overwrite").save()

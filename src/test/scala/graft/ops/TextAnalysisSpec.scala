@@ -373,7 +373,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
       .selectExpr("doc_id", "text", "'en' AS lang", "source",
         "length(text) AS n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("t23-spec")
+    val dir = tempDir("t23-spec")
       .toFile.getAbsolutePath
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val w = graft.SparkEntry.queries("t23_dsir_weights")(spark, dir)

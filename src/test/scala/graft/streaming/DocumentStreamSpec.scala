@@ -230,7 +230,7 @@ class DocumentStreamSpec extends SparkSpec {
       "id, and a replayed batch leaves the verdicts bit-identical") {
     val sparkS = spark
     import sparkS.implicits._
-    val root = java.nio.file.Files.createTempDirectory("st35_spec_")
+    val root = tempDir("st35_spec_")
       .resolve("lake").toString
     val lake = new DocumentStream.SigStoreLake(spark, root)
     def verdictRows(): Seq[(Long, Long, Int, Int, Int)] =

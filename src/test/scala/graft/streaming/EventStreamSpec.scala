@@ -45,7 +45,7 @@ class EventStreamSpec extends SparkSpec {
     // carry window state forward (state store), so the two-run result
     // equals a single uninterrupted run over all the data.
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_ckpt_restart")
+    val base = tempDir("graft_ckpt_restart")
     val src = base.resolve("src").toString
     val ckpt = base.resolve("ckpt").toString
     val out = base.resolve("out").toString
@@ -654,7 +654,7 @@ class EventStreamSpec extends SparkSpec {
   test("foreachBatch sink: replaying a batch leaves the sink unchanged") {
     val sparkS = spark
     import sparkS.implicits._
-    val out = java.nio.file.Files.createTempDirectory("st08_spec_").toString
+    val out = tempDir("st08_spec_").toString
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val b1 = Seq((3L, "c")).toDF("id", "v")
     writeBatchIdempotent(b0, 0, out)
@@ -692,7 +692,7 @@ class EventStreamSpec extends SparkSpec {
   test("st32 auto-compaction: the 2nd commit bin-packs touched " +
       "buckets, the pre-compaction manifest still reads identically, " +
       "and resolution survives replay") {
-    val root = java.nio.file.Files.createTempDirectory("st32_spec_")
+    val root = tempDir("st32_spec_")
       .resolve("lake").toString
     val lake = new EventStream.AutoCompactLake(spark, root,
       every = 2, fanout = 2)
@@ -738,10 +738,47 @@ class EventStreamSpec extends SparkSpec {
     assert(resolved() == afterUpdate, "replay moved the resolved state")
   }
 
+  test("st32 auto-compaction: a one-bucket delta's OPTIMIZE rewrites " +
+      "only that bucket; untouched buckets' manifest entries pass " +
+      "through unchanged") {
+    val root = tempDir("st32_narrow_spec_").resolve("lake").toString
+    val lake = new EventStream.AutoCompactLake(spark, root,
+      every = 2, fanout = 2)
+    // Two wide appends (users 16..23 → buckets 0..7): the cadence
+    // fires a full-lake OPTIMIZE.
+    def wide(era: Long) = cdcBatch((0L until 8L).map(i =>
+      (era * 100L + i, 16L + i, era * 100L, "view", i.toDouble)))
+    lake.append(wide(1L))
+    lake.append(wide(2L))
+    assert(lake.compactions == 1)
+    val before = lake.currentFiles
+    assert(before.map(_._1).toSet == (0 until 8).toSet, before)
+    // Two narrow appends (users 16 and 24, both bucket 0): the next
+    // OPTIMIZE may rewrite bucket 0 only.
+    lake.append(cdcBatch(Seq((301L, 16L, 300L, "click", 1.5))))
+    lake.append(cdcBatch(Seq((401L, 24L, 400L, "click", 2.5))))
+    assert(lake.compactions == 2, "compaction did not fire on cadence")
+    val after = lake.currentFiles
+    val rewritten = after.filterNot(before.contains)
+    assert(rewritten.nonEmpty && rewritten.forall(_._1 == 0),
+      s"narrow OPTIMIZE rewrote outside bucket 0: $rewritten")
+    assert(before.filter(_._1 == 0).forall(f => !after.contains(f)),
+      "bucket 0's pre-OPTIMIZE files are still current")
+    assert(after.filter(_._1 != 0).toSet == before.filter(_._1 != 0).toSet,
+      "untouched buckets' manifest entries changed across the narrow " +
+        "OPTIMIZE")
+    val resolved = lake.resolvedCurrent().collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
+      .sortBy(_._1).toSeq
+    assert(resolved == Seq((16L, 300L, 1.5)) ++
+      (1L until 8L).map(i => (16L + i, 200L, i.toDouble)) ++
+      Seq((24L, 400L, 2.5)), resolved)
+  }
+
   test("st33 retention: files outside the newest manifests are " +
       "physically reclaimed, the retained window stays readable, " +
       "resolution is untouched") {
-    val root = java.nio.file.Files.createTempDirectory("st33_spec_")
+    val root = tempDir("st33_spec_")
       .resolve("lake").toString
     val lake = new EventStream.AutoCompactLake(spark, root,
       every = 2, fanout = 2, retainVersions = Some(2))
@@ -819,8 +856,7 @@ class EventStreamSpec extends SparkSpec {
     import sparkS.implicits._
     def writeEvents(rows: Seq[(Long, Option[java.sql.Timestamp], Long,
         String, Double)]): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("st32_nullts_").toString
+      val dir = tempDir("st32_nullts_").toString
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
         .withColumn("props", lit(null).cast("string"))
         .select("event_id", "ts", "user_id", "event_type", "value",
@@ -874,7 +910,7 @@ class EventStreamSpec extends SparkSpec {
       "recompute") {
     val sparkS = spark
     import sparkS.implicits._
-    val root = java.nio.file.Files.createTempDirectory("st34_spec_")
+    val root = tempDir("st34_spec_")
       .resolve("lake").toString
     val lake = new EventStream.WccLabelLake(spark, root, every = 2)
     def hist(): Set[(Long, Long)] = lake.labelsHistogram()
@@ -925,7 +961,7 @@ class EventStreamSpec extends SparkSpec {
       "same recurrence") {
     val sparkS = spark
     import sparkS.implicits._
-    val root = java.nio.file.Files.createTempDirectory("st36_spec_")
+    val root = tempDir("st36_spec_")
       .resolve("lake").toString
     val lake = new EventStream.RankLake(spark, root, every = 2,
       baseIters = 2, deltaIters = 1)
@@ -1021,7 +1057,7 @@ class EventStreamSpec extends SparkSpec {
     // (order-dependent by construction) would flake. After pinning,
     // the global mtime order across slices is total and matches the
     // slice index order.
-    val input = java.nio.file.Files.createTempDirectory("pin_spec_")
+    val input = tempDir("pin_spec_")
       .toString
     val t0 = System.currentTimeMillis()
     for (i <- 0 until 3) {
@@ -1040,7 +1076,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("st28 merge: re-applying the same batch leaves the lake " +
       "bit-identical (replay idempotency)") {
-    val root = java.nio.file.Files.createTempDirectory("st28_idem_")
+    val root = tempDir("st28_idem_")
       .resolve("lake").toString
     val b = cdcBatch(Seq(
       (1L, 10L, 100L, "view", 1.0),
@@ -1060,9 +1096,9 @@ class EventStreamSpec extends SparkSpec {
 
   test("st28 merge: incremental batches converge to the single-shot " +
       "merge, late rows never outrank newer state") {
-    val rootA = java.nio.file.Files.createTempDirectory("st28_inc_")
+    val rootA = tempDir("st28_inc_")
       .resolve("lake").toString
-    val rootB = java.nio.file.Files.createTempDirectory("st28_one_")
+    val rootB = tempDir("st28_one_")
       .resolve("lake").toString
     val b1 = cdcBatch(Seq(
       (1L, 20L, 100L, "view", 1.0),
@@ -1095,7 +1131,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("st28 merge: an untouched bucket's files are not rewritten " +
       "(partition-scoped copy-on-write)") {
-    val root = java.nio.file.Files.createTempDirectory("st28_cow_")
+    val root = tempDir("st28_cow_")
       .resolve("lake").toString
     // bucket 1 (user 17 % 8 = 1) and bucket 3 (user 19 % 8 = 3)
     EventStream.mergeBatchIntoLake(cdcBatch(Seq(
