@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Discogs `releases` XML (gzipped) → Snappy Parquet — the whole
   * reference program (`/root/reference/src/main.rs`), re-expressed
@@ -17,10 +19,11 @@ import org.apache.spark.sql.functions.col
   * supplies the batching, dictionary encoding and Snappy compression
   * the reference implements manually (SURVEY.md §4). The reference
   * runs its gunzip → parse → encode chain on one thread; here one task
-  * runs it on two ([[Overlapped]]): the task thread keeps the scan and
-  * the Parquet writer, which Spark and Hadoop own and close with the
-  * task, and one helper thread runs the parser, which needs nothing
-  * from Spark, between them.
+  * spreads it over the task thread and the JVM's one parse pool
+  * ([[Overlapped]]): the task thread keeps the scan and the Parquet
+  * writer, which Spark and Hadoop own and close with the task, and
+  * hands the pool's workers, one per spare core, batches of raw UTF-8
+  * lines to parse, which needs nothing from Spark.
   *
   * Semantics replicated exactly, all in the parser (pinned by
   * DiscogsReleasesSpec):
@@ -39,6 +42,12 @@ import org.apache.spark.sql.functions.col
   *    release missing one fails, and so does an `id`/`master_id`
   *    outside `0..Int.MaxValue`
   *
+  * Stricter than a `String` read, and closer to the reference, whose
+  * strings are Rust `str`: the parser reads each line's UTF-8 bytes,
+  * so an invalid UTF-8 sequence fails its release, named, where a
+  * decode through Spark's `UTF8String.toString` would have silently
+  * turned it into U+FFFD (MalformedReleasesSpec).
+  *
   * Known deviation (documented, not copied): the reference manually
   * unescapes ONLY `&amp;` in genre/style text (`main.rs:596`, `619`),
   * so `&lt;` etc. would pass through escaped. The StAX reader unescapes
@@ -46,8 +55,8 @@ import org.apache.spark.sql.functions.col
   * Discogs genre/style values — behavior is identical.
   *
   * Scale: one `.xml.gz` is non-splittable: one task, whose bound is
-  * the slower of its two threads — the task thread's gunzip, line
-  * split and Parquet write, or the helper's parse. At 100 TB you'd
+  * its task thread's gunzip, line split and Parquet write while the
+  * pool's workers keep up with the parse. At 100 TB you'd
   * ingest many dump files (one task each) or [[rechunk]] once (cheap
   * text-level split, no XML parsing); everything downstream of the
   * scan parallelizes.
@@ -56,21 +65,31 @@ object DiscogsReleases {
 
   /** Parse the dump into rows of [[ReleaseSchema.outputSchema]]: the
     * lines of `input` (`spark.read.text`; gzip is transparent, one task
-    * per `.gz` file) streamed through one [[ReleaseParser]] per
-    * partition. The parser runs on a helper thread of the task
+    * per `.gz` file), each line's UTF-8 bytes copied off the scan's row
+    * and parsed by [[ReleaseParser]]s on the shared parse pool
     * ([[Overlapped]]), so the task thread's scan and the consumer of the
-    * rows (the Parquet writer in [[run]]) overlap it; it sees the same
-    * lines in the same order, and the rows keep that order. A line that
-    * is neither a document frame nor one whole release, a malformed or
-    * missing value or unknown content fails the task with a message
-    * naming the release id (or the line) — the reference's
+    * rows (the Parquet writer in [[run]]) overlap the parse; the rows
+    * and the first failure come in line order, as from one parser per
+    * partition. A line that is neither a document frame nor one whole
+    * release, a malformed or missing value, an invalid UTF-8 sequence
+    * or unknown content fails the task with a message naming the
+    * release id (or the line) — the reference's
     * panic-on-unexpected, SURVEY S3/S5/S6.
     */
   def read(spark: SparkSession, input: String): DataFrame = {
     val rows = spark.read.text(input).queryExecution.toRdd.mapPartitions { lines =>
-      new Overlapped(lines.map(_.getUTF8String(0).toString))
+      new Overlapped(lines.map(line => bytes(line.getUTF8String(0))))
     }
     GraftBridge.internalCreateDataFrame(spark, rows, ReleaseSchema.outputSchema)
+  }
+
+  /** A copy of `s`'s UTF-8 bytes, never a view of the scan's reused row
+    * buffer: the line outlives the row that held it.
+    */
+  private def bytes(s: UTF8String): Array[Byte] = {
+    val b = new Array[Byte](s.numBytes)
+    s.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    b
   }
 
   /** The identity ([[read]] yields output rows), kept because perfbench's layer probes call it. */

@@ -1,124 +1,123 @@
 package graft.etl
 
-import java.util.concurrent.ArrayBlockingQueue
+import java.util.ArrayDeque
+import java.util.concurrent.{ExecutionException, FutureTask, LinkedBlockingQueue, ThreadFactory,
+  ThreadPoolExecutor, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 
-/** One task's release lines parsed on a second thread: the task thread
-  * pulls `lines` and consumes the rows, one daemon helper,
-  * `graft-release-parser`, runs the unchanged [[ReleaseParser]] between
-  * them. Batches of [[Overlapped.Batch]] lines go out and batches of
-  * rows come back through two queues of [[Overlapped.Depth]] batches
-  * each, so the scan and the write overlap the parse.
+/** One task's release lines parsed on the JVM's one parse pool. The
+  * task thread pulls `lines`, the UTF-8 bytes of the partition's lines,
+  * submits them in batches of [[Overlapped.Batch]] to the pool, where a
+  * fresh [[ReleaseParser]] parses each, keeps [[Overlapped.Window]]
+  * batches in flight and hands on their rows in line order. A head
+  * batch no worker has started is parsed on the task thread, so tasks
+  * that already fill the cores do not queue behind each other.
   *
-  * Every Spark- and Hadoop-owned resource stays on the task thread: the
-  * helper only takes `String`s and builds rows, and never touches the
-  * scan, whose streams a task-completion listener closes. The task
-  * thread pulls `lines` only while no rows are ready and the line queue
-  * has room for a batch plus its end marker; otherwise it waits for
-  * rows. The parser sees exactly the lines it would see alone, so its
-  * line numbers and messages are unchanged, and its failure is rethrown
-  * as is on the task thread.
+  * Workers only turn bytes into rows; Spark's resources stay on the task
+  * thread. A release starts and ends on its own line, so a batch parses
+  * alone into the plain parser's rows, lines counted from its first.
   *
-  * A task-completion listener stops the helper, so a failed, killed or
-  * early-stopped task (a `limit`) does not leave it waiting: every
-  * blocking call on either side is interruptible.
+  * Failures come in line order, with the plain parser's message: when
+  * the head batch fails (perhaps only because a release is cut at its
+  * end), one sequential [[ReleaseParser]] on the task thread parses on
+  * from its first line through the lines the window holds and the rest
+  * of the scan. A scan failure (a truncated gzip) is held until every
+  * line before it is parsed. A task-completion listener drops the
+  * task's queued batches; an idle worker ends after a second.
   */
-private[etl] final class Overlapped(lines: Iterator[String])
+private[etl] final class Overlapped(lines: Iterator[Array[Byte]])
     extends Iterator[InternalRow] {
   import Overlapped._
 
-  private val toParser = new ArrayBlockingQueue[Array[String]](Depth)
-  private val fromParser = new ArrayBlockingQueue[Array[InternalRow]](Depth)
-  /** Set, before the interrupt, once the task is over: the helper then
-    * hands nothing back.
-    */
-  @volatile private var cancelled = false
-  /** The helper's failure, published by its end marker. */
+  /** Submitted batches not yet consumed, in line order; task thread only. */
+  private val window = new ArrayDeque[Parse](Window)
+  /** The scan's failure, held until every line read before it is parsed. */
   private var failure: Throwable = null
-
-  private var linesSent = false
-  private var rows = NoRows
-  private var i = 0
-  private var done = false
-
-  private val helper = new Thread(() => parse(), "graft-release-parser")
-  helper.setDaemon(true)
-  // Registered before the start, so that outside a task nothing starts.
-  TaskContext.get().addTaskCompletionListener[Unit] { _ =>
-    cancelled = true
-    helper.interrupt()
+  /** `lines` up to its end or its failure. */
+  private val scan = new Iterator[Array[Byte]] {
+    def hasNext: Boolean = failure == null &&
+      (try lines.hasNext catch { case NonFatal(e) => failure = e; false })
+    def next(): Array[Byte] = lines.next()
   }
-  helper.start()
+  private var nextLine = 1
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var ended = false
+
+  TaskContext.get().addTaskCompletionListener[Unit](_ => while (!window.isEmpty) pool.remove(window.poll()))
 
   def hasNext: Boolean = {
-    while (i == rows.length && !done) {
-      val ready = fromParser.poll()
-      if (ready != null) receive(ready)
-      else if (!linesSent && toParser.remainingCapacity > 1) send()
-      else receive(fromParser.take())
+    while (!rows.hasNext && !ended) {
+      fill()
+      val head = window.poll()
+      if (head == null) ended = true else rows = parsed(head)
     }
-    !done
+    if (!rows.hasNext && failure != null) throw failure
+    rows.hasNext
   }
 
   def next(): InternalRow = {
     if (!hasNext) throw new NoSuchElementException
-    i += 1
-    rows(i - 1)
+    rows.next()
   }
 
-  /** The next batch of lines, or the end marker (an empty batch) once
-    * `lines` is done.
+  /** Submit batches of the scan's lines until the window is full or the scan is over. */
+  private def fill(): Unit =
+    while (window.size < Window && scan.hasNext) {
+      val batch = new ArrayBuffer[Array[Byte]](Batch)
+      while (batch.length < Batch && scan.hasNext) batch += scan.next()
+      val p = new Parse(batch.toArray, nextLine)
+      nextLine += batch.length
+      window.add(p)
+      pool.execute(p)
+    }
+
+  /** The head batch's rows, parsed here if no worker started it, or, if
+    * it failed, the sequential parse from its first line on.
     */
-  private def send(): Unit = {
-    val batch = new ArrayBuffer[String](Batch)
-    while (batch.length < Batch && lines.hasNext) batch += lines.next()
-    linesSent = batch.isEmpty
-    toParser.put(batch.toArray)
-  }
-
-  private def receive(batch: Array[InternalRow]): Unit = {
-    rows = batch
-    i = 0
-    if (batch.isEmpty) {
-      done = true
-      if (failure != null) throw failure
+  private def parsed(head: Parse): Iterator[InternalRow] = {
+    if (pool.remove(head)) head.run()
+    try head.get().iterator
+    catch {
+      case _: ExecutionException =>
+        val held = ArrayBuffer(head)
+        while (!window.isEmpty) { held += window.poll(); pool.remove(held.last) }
+        ended = true
+        new ReleaseParser(held.iterator.flatMap(_.lines.iterator) ++ scan, head.firstLine)
     }
   }
-
-  /** The helper: parse the lines taken from `toParser` into batches of
-    * rows on `fromParser`, then the end marker, after `failure` if the
-    * parser threw.
-    */
-  private def parse(): Unit =
-    try {
-      failure =
-        try {
-          val parsed = new ReleaseParser(
-            Iterator.continually(toParser.take()).takeWhile(_.nonEmpty).flatMap(_.iterator))
-          val batch = new ArrayBuffer[InternalRow](Batch)
-          while (parsed.hasNext) {
-            batch += parsed.next()
-            if (batch.length == Batch) { fromParser.put(batch.toArray); batch.clear() }
-          }
-          if (batch.nonEmpty) fromParser.put(batch.toArray)
-          null
-        } catch { case t: Throwable => t }
-      if (!cancelled) fromParser.put(NoRows)
-    } catch { case _: InterruptedException => () } // the task is over
 }
 
 private[etl] object Overlapped {
-
-  /** Lines per batch sent to the helper, and rows per batch back. */
+  /** Lines per batch, each parsed by its own [[ReleaseParser]]. */
   val Batch = 256
 
-  /** Batches each queue holds. */
-  val Depth = 8
+  /** Parse workers: every core but the one a task thread needs. */
+  private val Workers: Int = math.max(1, Runtime.getRuntime.availableProcessors - 1)
 
-  /** The end marker of the rows: a real batch is never empty. */
-  private val NoRows = Array.empty[InternalRow]
+  /** Batches one task keeps in flight: two per worker, so none idles,
+    * and at most 8, bounding a task's lines in memory on any machine.
+    */
+  val Window: Int = math.min(2 * Workers, 8)
+
+  /** One batch's parse; its lines are kept for a sequential re-parse. */
+  private final class Parse(val lines: Array[Array[Byte]], val firstLine: Int)
+      extends FutureTask[Array[InternalRow]](() => new ReleaseParser(lines.iterator, firstLine).toArray)
+
+  /** Every task's workers: `graft-release-parser` daemons, started on
+    * demand, each ending after a second idle.
+    */
+  private lazy val pool: ThreadPoolExecutor = {
+    val daemon: ThreadFactory = { r =>
+      val t = new Thread(r, "graft-release-parser"); t.setDaemon(true); t
+    }
+    val p = new ThreadPoolExecutor(Workers, Workers, 1, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), daemon)
+    p.allowCoreThreadTimeOut(true)
+    p
+  }
 }

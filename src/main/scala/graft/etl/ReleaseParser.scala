@@ -1,6 +1,8 @@
 package graft.etl
 
-import java.io.Reader
+import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
 import javax.xml.stream.{XMLInputFactory, XMLStreamException, XMLStreamReader}
 import javax.xml.stream.XMLStreamConstants._
 
@@ -18,13 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * and the release-level skip-subtrees without building anything from
   * them, and fail on anything the reference's grammar does not know.
   *
-  * `lines` are one partition's lines of a one-release-per-line dump:
-  * frame lines ([[ReleaseParser.isFrameLine]]) and lines that each
-  * hold one `<release …>…</release>`. One StAX reader streams the
-  * release lines of the whole partition, wrapped in a synthetic root,
-  * with frame lines left empty, so its line number is the partition's
-  * line number: a release must start and end on its own line. Any
-  * other line ends the stream there and fails, named by its number.
+  * `lines` are the UTF-8 bytes of consecutive lines of a partition of
+  * a one-release-per-line dump, the first of them the partition's line
+  * `firstLine`: frame lines ([[ReleaseParser.isFrameLine]]) and lines
+  * that each hold one `<release …>…</release>`. One StAX reader streams
+  * the release lines, wrapped in a synthetic root, with frame lines
+  * left empty, and every line number it reports is counted from
+  * `firstLine`, so messages name the partition's line: a release must
+  * start and end on its own line. Any other line ends the stream there
+  * and fails, named by its number. An invalid UTF-8 sequence fails the
+  * release that holds it.
   *
   * Every failure is an `IllegalArgumentException` whose message starts
   * `Malformed release id=<id>` once the id attribute has been read
@@ -42,12 +47,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * is ""; an absent list container is an empty list; `master_id` and
   * `is_main_release` are null when `<master_id>` is absent.
   */
-private[etl] final class ReleaseParser(lines: Iterator[String])
+private[etl] final class ReleaseParser(lines: Iterator[Array[Byte]], firstLine: Int)
     extends Iterator[InternalRow] {
   import ReleaseParser._
 
-  private val in = new LinesReader(lines)
-  private val r = factory.createXMLStreamReader(in)
+  /** From the reader's rows to the partition's lines: row 1 holds only
+    * the synthetic root, so line `firstLine` is row 2 and every column
+    * is the line's own.
+    */
+  private val skew = firstLine - 2
+  private val in = new LinesStream(lines)
+  private val r = factory.createXMLStreamReader(in, "UTF-8")
 
   /** The current release's raw id attribute and line, for errors. */
   private var rawId: String = null
@@ -85,7 +95,7 @@ private[etl] final class ReleaseParser(lines: Iterator[String])
     guard {
       val row = release(r)
       if (r.getLocation.getLineNumber != line)
-        fail(s"release ends on line ${r.getLocation.getLineNumber}")
+        fail(s"release ends on line ${r.getLocation.getLineNumber + skew}")
       row
     }
   }
@@ -97,9 +107,14 @@ private[etl] final class ReleaseParser(lines: Iterator[String])
         if (rawId == null) // between releases: name the failing line
           line = Option(e.getLocation).fold(in.lineNo)(_.getLineNumber)
         if (in.badLine != null)
-          fail(s"line ${in.lineNo} is not a <release> line: ${in.badLine.take(120)}")
-        fail(e.getMessage)
+          fail(s"line ${in.lineNo + skew} is not a <release> line: ${in.badLine.take(120)}")
+        fail(located(e.getMessage))
     }
+
+  /** A StAX message with its row counted from `firstLine`. */
+  private def located(msg: String): String =
+    ParseErrorRow.findPrefixMatchOf(msg).fold(msg)(m =>
+      s"ParseError at [row,col]:[${m.group(1).toInt + skew}," + m.after)
 
   private def release(r: XMLStreamReader): InternalRow = {
     var id = -1
@@ -272,7 +287,7 @@ private[etl] final class ReleaseParser(lines: Iterator[String])
 
   private def fail(msg: String): Nothing = {
     val id = if (rawId != null) s" id=$rawId" else ""
-    throw new IllegalArgumentException(s"Malformed release$id (line $line): $msg")
+    throw new IllegalArgumentException(s"Malformed release$id (line ${line + skew}): $msg")
   }
 }
 
@@ -321,42 +336,67 @@ private[etl] object ReleaseParser {
     trimmed.isEmpty || trimmed == "<releases>" || trimmed == "</releases>" ||
       trimmed.startsWith("<?xml")
 
-  /** `<releases>`, the lines (frame lines emptied) joined by newlines,
-    * `</releases>`, as one character stream; no line is copied. A line
-    * that is neither a frame nor a `<release …>` line is kept in
+  /** How the JDK's `XMLStreamException` message starts: its row. */
+  private val ParseErrorRow = """ParseError at \[row,col\]:\[(\d+),""".r
+
+  private val Open = "<releases>\n".getBytes(UTF_8)
+  private val Close = "</releases>".getBytes(UTF_8)
+  private val Newline = "\n".getBytes(UTF_8)
+  private val NoBytes = Array.empty[Byte]
+  private val ReleaseTag = "<release ".getBytes(UTF_8)
+
+  /** Whether the line's first byte after leading blanks (those
+    * `String.trim` drops) starts `<release `.
+    */
+  private def isReleaseLine(l: Array[Byte]): Boolean = {
+    var i = 0
+    while (i < l.length && (l(i) & 0xff) <= ' ') i += 1
+    l.length - i >= ReleaseTag.length &&
+      Arrays.equals(l, i, i + ReleaseTag.length, ReleaseTag, 0, ReleaseTag.length)
+  }
+
+  /** `<releases>` on a row of its own, the lines (frame lines emptied)
+    * joined by newlines, `</releases>`, as one byte stream; `lineNo` is
+    * the row of the last line read. No line is copied. A line that
+    * is neither a frame nor a `<release …>` line is kept, decoded, in
     * `badLine` and ends the stream early, which the StAX reader reports
     * as an unexpected end of input.
     */
-  private final class LinesReader(lines: Iterator[String]) extends Reader {
-    var lineNo = 0
+  private final class LinesStream(lines: Iterator[Array[Byte]]) extends InputStream {
+    var lineNo = 1
     var badLine: String = null
-    private var cur = "<releases>"
+    private var cur = Open
     private var pos = 0
     private var newline = false
     private var ended = false
 
-    override def read(buf: Array[Char], off: Int, len: Int): Int = {
+    override def read(buf: Array[Byte], off: Int, len: Int): Int = {
+      if (len == 0) return 0
       while (pos == cur.length) {
         if (ended) return -1
         pos = 0
-        if (newline) { cur = "\n"; newline = false }
+        if (newline) { cur = Newline; newline = false }
         else if (lines.hasNext) {
           val l = lines.next()
-          val t = l.trim
           lineNo += 1
           newline = true
-          cur = if (t.startsWith("<release ")) l else if (isFrameLine(t)) "" else {
-            badLine = t; ended = true; ""
+          cur = if (isReleaseLine(l)) l else {
+            val t = new String(l, UTF_8).trim
+            if (!isFrameLine(t)) { badLine = t; ended = true }
+            NoBytes
           }
-        } else { cur = "</releases>"; ended = true }
+        } else { cur = Close; ended = true }
       }
       val n = math.min(len, cur.length - pos)
-      cur.getChars(pos, pos + n, buf, off)
+      System.arraycopy(cur, pos, buf, off, n)
       pos += n
       n
     }
 
-    override def close(): Unit = ()
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    }
   }
 
   /** Skip the current element's whole subtree. */

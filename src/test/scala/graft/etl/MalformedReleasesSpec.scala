@@ -18,10 +18,13 @@ class MalformedReleasesSpec extends SparkSpec {
   private val good =
     """<release id="40" status="Accepted"><title>ok</title><artists></artists><genres></genres><styles></styles><labels></labels></release>"""
 
-  private def gzip(name: String, text: String): File = {
+  private def gzip(name: String, text: String): File =
+    gzipBytes(name, text.getBytes(StandardCharsets.UTF_8))
+
+  private def gzipBytes(name: String, bytes: Array[Byte]): File = {
     val f = new File(tmpDir, name)
     val out = new GZIPOutputStream(new FileOutputStream(f))
-    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(bytes) finally out.close()
     f
   }
 
@@ -77,6 +80,15 @@ class MalformedReleasesSpec extends SparkSpec {
   test("two releases on one line fail, naming the second") {
     val msg = failure(dump("twoperline.xml.gz", good + good.replace("\"40\"", "\"47\"")))
     assert(msg.contains("Malformed release id=47"), msg)
+  }
+
+  test("an invalid UTF-8 sequence fails, naming the release") {
+    // 0xC3 opens a two-byte sequence that '(' (0x28) cannot continue.
+    val Array(before, after) = (s"<releases>\n$good\n" +
+      """<release id="52" status="Accepted"><title>a|b</title></release>""" +
+      "\n</releases>\n").split('|').map(_.getBytes(StandardCharsets.UTF_8))
+    val msg = failure(gzipBytes("badutf8.xml.gz", before ++ Array(0xC3, 0x28).map(_.toByte) ++ after))
+    assert(msg.contains("Malformed release id=52"), msg)
   }
 
   test("a non-numeric id fails, naming it") {

@@ -16,10 +16,11 @@ import graft.SparkSpec
 
 /** [[Overlapped]] against the plain [[ReleaseParser]]: on an input far
   * longer than the batches in flight, `read` yields the parser's rows in
-  * its order and fails with its message, and no `graft-release-parser`
-  * thread outlives a conversion, however the task ends. Every Spark call
-  * here is bounded, so a stuck hand-off fails the test instead of
-  * hanging it.
+  * its order and fails with its message, also at a batch boundary and
+  * before a truncation; tasks sharing the parse pool keep their own
+  * rows; and no `graft-release-parser` thread outlives a conversion,
+  * however the task ends. Every Spark call here is bounded, so a stuck
+  * hand-off fails the test instead of hanging it.
   */
 class OverlappedSpec extends SparkSpec {
 
@@ -42,6 +43,9 @@ class OverlappedSpec extends SparkSpec {
   private def lines(releases: Seq[String]): Seq[String] =
     "<releases>" +: releases :+ "</releases>"
 
+  private def bytes(lines: Seq[String]): Iterator[Array[Byte]] =
+    lines.iterator.map(_.getBytes(StandardCharsets.UTF_8))
+
   private def gzip(name: String, lines: Seq[String]): String = {
     val f = new File(tmpDir, name)
     val out = new GZIPOutputStream(new FileOutputStream(f))
@@ -57,6 +61,18 @@ class OverlappedSpec extends SparkSpec {
   private lazy val badLines = goodLines.updated(4001,
     goodLines(4001).replace("<title>T &amp;", "<title>T &bogus;"))
   private lazy val bad = gzip("bad.xml.gz", badLines)
+
+  /** The message of the plain parser's failure on `lines`. */
+  private def plainFailure(lines: Seq[String]): String =
+    intercept[IllegalArgumentException] {
+      new ReleaseParser(bytes(lines), 1).foreach(_ => ())
+    }.getMessage
+
+  /** The message of `read`'s failure on the dump at `path`. */
+  private def readFailure(path: String): String =
+    intercept[IllegalArgumentException] {
+      bounded(DiscogsReleases.validateNoUnknownContent(spark, path))
+    }.getMessage
 
   /** `body`, failed after a minute with its jobs cancelled. */
   private def bounded[T](body: => T): T = {
@@ -81,22 +97,62 @@ class OverlappedSpec extends SparkSpec {
 
   test("read yields the plain parser's rows, in its order") {
     val toRow = CatalystTypeConverters.createToScalaConverter(ReleaseSchema.outputSchema)
-    val expected = new ReleaseParser(goodLines.iterator).map(toRow(_).asInstanceOf[Row]).toSeq
+    val expected = new ReleaseParser(bytes(goodLines), 1).map(toRow(_).asInstanceOf[Row]).toSeq
     assert(expected.length == n)
-    assert(expected.length > Overlapped.Batch * Overlapped.Depth * 2)
+    assert(expected.length > Overlapped.Batch * Overlapped.Window * 2)
     val got = bounded(DiscogsReleases.read(spark, good).collect()).toSeq
     assert(got == expected)
   }
 
   test("a late malformed release fails with the plain parser's message") {
     val expected = intercept[IllegalArgumentException] {
-      new ReleaseParser(badLines.iterator).foreach(_ => ())
+      new ReleaseParser(bytes(badLines), 1).foreach(_ => ())
     }.getMessage
     assert(expected.startsWith("Malformed release id=4001 (line 4002)"), expected)
     val got = intercept[IllegalArgumentException] {
       bounded(DiscogsReleases.validateNoUnknownContent(spark, bad))
     }.getMessage
     assert(got == expected)
+  }
+
+  test("a malformed release on the first line of a batch fails with the plain parser's message") {
+    // Line 257 is the first of the second batch.
+    val dump = goodLines.updated(256, goodLines(256).replace("<title>T &amp;", "<title>T &bogus;"))
+    val plain = plainFailure(dump)
+    assert(plain.startsWith("Malformed release id=256 (line 257)"), plain)
+    assert(readFailure(gzip("batch_head.xml.gz", dump)) == plain)
+  }
+
+  test("a release split across two batches fails with the plain parser's message") {
+    // Lines 512 and 513 end the second batch and start the third.
+    val dump = goodLines
+      .updated(511, """<release id="511" status="Accepted"><title>x</title>""")
+      .updated(512, "<artists></artists></release>")
+    val plain = plainFailure(dump)
+    assert(plain.startsWith("Malformed release id=511 (line 512)"), plain)
+    assert(readFailure(gzip("batch_split.xml.gz", dump)) == plain)
+  }
+
+  test("a malformed release before a truncation fails with its own message, every time") {
+    val plain = plainFailure(badLines)
+    // The gzip is cut about 500 lines after the malformed release.
+    val whole = Files.readAllBytes(new File(bad).toPath)
+    val cut = new File(tmpDir, "bad_truncated.xml.gz")
+    Files.write(cut.toPath, whole.take(whole.length * 9 / 10))
+    for (_ <- 1 to 5) assert(readFailure(cut.getAbsolutePath) == plain)
+  }
+
+  test("tasks sharing the parse pool each yield their own file's rows in order") {
+    val dir = new File(tmpDir, "two")
+    dir.mkdir()
+    val files = Seq(0, n).map(from => lines((from until from + n).map(release)))
+    files.zipWithIndex.foreach { case (f, i) => gzip(s"two/part$i.xml.gz", f) }
+    val toRow = CatalystTypeConverters.createToScalaConverter(ReleaseSchema.outputSchema)
+    val expected = files.map(f => new ReleaseParser(bytes(f), 1).map(toRow(_).asInstanceOf[Row]).toSeq)
+    assert(spark.sparkContext.defaultParallelism >= 2)
+    val got = bounded(DiscogsReleases.read(spark, dir.getAbsolutePath).rdd
+      .mapPartitions(it => Iterator(it.toVector)).collect()).toSeq
+    assert(got.sortBy(_.head.getInt(0)) == expected)
   }
 
   test("no parser thread outlives a successful conversion") {
