@@ -57,8 +57,10 @@ object EtlBench {
     val tGen = (System.nanoTime() - t0) / 1e9
 
     val spark = graft.GraftSession.builder().getOrCreate()
-    // warm codegen/JIT on a small prefix
-    DiscogsReleases.run(spark, xml, s"$tmp/warm")
+    // warm codegen/JIT on a small dump of its own
+    val warm = s"$tmp/warm.xml.gz"
+    genXml(warm, math.min(n, 10000))
+    DiscogsReleases.run(spark, warm, s"$tmp/warm")
 
     val t1 = System.nanoTime()
     DiscogsReleases.run(spark, xml, s"$tmp/out")

@@ -100,8 +100,8 @@ object RollingFingerprints {
     * Called from generated code — Java-friendly signature.
     */
   def compute(bytes: Array[Byte], minLen: Int): Array[Long] = {
-    val cps = codePoints(bytes)
-    val n = cps.length
+    val points = codePoints(bytes)
+    val n = points.length
     if (n < minLen) return Array.emptyLongArray
     // B^(minLen-1) mod P, once per call (minLen is tiny).
     var pw1 = 1L
@@ -117,15 +117,15 @@ object RollingFingerprints {
     var h2 = 0L
     i = 0
     while (i < minLen) {
-      h1 = (h1 * B + cps(i)) % P1
-      h2 = (h2 * B + cps(i)) % P2
+      h1 = (h1 * B + points(i)) % P1
+      h2 = (h2 * B + points(i)) % P2
       i += 1
     }
     out(0) = (h1 << 31) | h2
     var p = 1
     while (p <= n - minLen) {
-      val cOut = cps(p - 1)
-      val cIn = cps(p + minLen - 1)
+      val cOut = points(p - 1)
+      val cIn = points(p + minLen - 1)
       h1 = ((h1 + P1 - cOut * pw1 % P1) % P1 * B + cIn) % P1
       h2 = ((h2 + P2 - cOut * pw2 % P2) % P2 * B + cIn) % P2
       out(p) = (h1 << 31) | h2
@@ -139,16 +139,16 @@ object RollingFingerprints {
     */
   private[graft] def computeDirect(bytes: Array[Byte],
       minLen: Int): Array[Long] = {
-    val cps = codePoints(bytes)
-    val n = cps.length
+    val points = codePoints(bytes)
+    val n = points.length
     if (n < minLen) return Array.emptyLongArray
     Array.tabulate(n - minLen + 1) { p =>
       var h1 = 0L
       var h2 = 0L
       var j = p
       while (j < p + minLen) {
-        h1 = (h1 * B + cps(j)) % P1
-        h2 = (h2 * B + cps(j)) % P2
+        h1 = (h1 * B + points(j)) % P1
+        h2 = (h2 * B + points(j)) % P2
         j += 1
       }
       (h1 << 31) | h2

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SessionMemo, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 
 /** Graph analytics over the TPC-H trade graph — the operator family a
   * corpus pipeline reaches for when documents/entities link to each
@@ -38,7 +38,7 @@ object Graph {
     * either table, and freeing: see [[graft.SessionMemo]].
     */
   private val pairsMemo =
-    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
+    new SessionMemo[String, DataFrame](Checkpoints.free)
 
   /** Per-round join-strategy pick for the iterative primitives (guide
     * §3.1: pick the strategy deliberately; §2.4: a broadcast join
@@ -71,6 +71,9 @@ object Graph {
       broadcast(df)
     else df
 
+  /** [[cpKeyed]]'s target bytes per edge-list partition. */
+  private val PartitionBytes = 8000000L
+
   /** Materialize an edge list hash-partitioned by `key` with the
     * partitioning DECLARED on the checkpoint (r20, guide §2.4 "share
     * one exchange"): every iterative primitive aggregates per round
@@ -85,28 +88,27 @@ object Graph {
     * the family's summed task time at sf0.1 — each of 32 tasks per
     * round re-deserialized the node-sized broadcast hash relation
     * that AQE's size-aware coalescing previously amortized over ~5
-    * tasks): `approxBytes / spark.graft.graph.partitionBytes`
-    * (default 8 MB — the in-memory edge-frame analogue of AQE's
-    * small-partition coalescing), floored at 1, capped at
-    * `defaultParallelism` EXCEPT when the input is so large that the
-    * cap would push partitions past 128 MB — then bytes/128MB wins
+    * tasks): `approxBytes` / [[PartitionBytes]] (8 MB — the
+    * in-memory edge-frame analogue of AQE's small-partition
+    * coalescing), floored at 1, capped at `defaultParallelism`
+    * EXCEPT when the input is so large that the cap would push
+    * partitions past 128 MB — then bytes/128MB wins
     * (guide §2.2's 100 MB–1 GB range), so a 100 TB edge list gets
     * thousands of partitions, not cores-many.
     */
   private[graft] def cpKeyed(df: DataFrame, key: String,
       approxBytes: Long = -1L): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val target = df.sparkSession.conf
-      .get("spark.graft.graph.partitionBytes", "8000000").toLong
     val n =
       if (approxBytes <= 0L) par
       else {
-        val bySize = ((approxBytes + target - 1) / target).toInt max 1
+        val bySize = ((approxBytes + PartitionBytes - 1) /
+          PartitionBytes).toInt max 1
         val floor128 = (approxBytes / (128L * 1024 * 1024)).toInt max 1
         (bySize min par) max floor128
       }
-    org.apache.spark.sql.GraftCheckpoints.localCheckpointKeyed(
-      df, key, n)
+    Checkpoints.releasingOnFailure(df)(
+      org.apache.spark.sql.GraftCheckpoints.localCheckpointKeyed(df, key, n))
   }
 
   /** Unsafe-row size estimate for [[cpKeyed]]'s partition sizing:
@@ -173,44 +175,37 @@ object Graph {
     * scan is shared across the graph family.
     */
   def pageRankFrom(pairs: DataFrame,
-      iters: Int = 10, k: Int = 25): DataFrame = {
+      iters: Int = 10, k: Int = 25): DataFrame = Checkpoints.using { cps =>
     val s = pairs.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     val edges0 = bipartiteEdges(pairs)
     val outdeg = edges0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // dst-keyed materialization: every round's in-sum aggregate
-    // reuses this one exchange ([[cpKeyed]] checkpoints itself; only
-    // register it for the end-of-query free). |edges| = 2·|pairs|
-    // exactly (both directions) — the size hint for partition count.
+    // reuses this one exchange ([[cpKeyed]] checkpoints itself; `cps`
+    // only takes ownership). |edges| = 2·|pairs| exactly (both
+    // directions) — the size hint for partition count.
     val nPairs = pairs.count()
     // The outdeg side is node-sized (≤ 2·|pairs| rows) — broadcast it
     // under the guard so the build never exchanges/sorts the edge
     // list by src (r20).
-    val edges = cpKeyed(edges0.join(bcastIf(outdeg, 2L * nPairs),
-      "src"), "dst", rowBytes(2L * nPairs, 3))
-    cps += edges
-    val nodes = cp(edges.select(col("src").as("node")).distinct())
+    val edges = cps.own(cpKeyed(edges0.join(bcastIf(outdeg, 2L * nPairs),
+      "src"), "dst", rowBytes(2L * nPairs, 3)))
+    val nodes = cps(edges.select(col("src").as("node")).distinct())
     val n = nodes.count()
-    if (n == 0L) {
-      cps.foreach(Similarity.freeCheckpoint)
-      return Seq.empty[(Int, String, Long, Long)]
+    if (n == 0L)
+      Seq.empty[(Int, String, Long, Long)]
         .toDF("rnk", "node_type", "node_id", "r")
+    else {
+      val base = 1000000000000L / n
+      val teleport = (15L * base) / 100L
+      val ranks = prRounds(edges, nodes,
+        cps(nodes.select(col("node"), lit(base).as("r"))),
+        teleport, iters, cps, n)
+      // The result is bounded (k rows): materialize it so every
+      // checkpoint block can be freed — a bench/session running many
+      // queries must not inherit this op's working set.
+      prTopK(ranks, k).toDF("rnk", "node_type", "node_id", "r")
     }
-    val base = 1000000000000L / n
-    val teleport = (15L * base) / 100L
-    val ranks = prRounds(edges, nodes,
-      cp(nodes.select(col("node"), lit(base).as("r"))),
-      teleport, iters, cp, n)
-    // The result is bounded (k rows): materialize it and FREE every
-    // checkpoint block — a bench/session running many queries must
-    // not inherit this op's working set.
-    val out = prTopK(ranks, k)
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("rnk", "node_type", "node_id", "r")
   }
 
   /** `iters` rounds of the exact integer PageRank recurrence (see
@@ -345,14 +340,10 @@ object Graph {
 
   /** [[seedDistance]] from a prebuilt pair table ([[tradePairs]]). */
   def seedDistanceFrom(pairs: DataFrame, supplier: DataFrame,
-      rounds: Int = 6): DataFrame = {
+      rounds: Int = 6): DataFrame = Checkpoints.using { cps =>
     val s = pairs.sparkSession
     import s.implicits._
     val edges0 = bipartiteEdges(pairs)
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     // dst-keyed materialization with WEIGHTED self-loops (r20, the
     // [[relaxRounds]] join-free shape adapted to min-plus): a w=0
     // self-loop per node makes min_{u→v incl. self}(dist(u) + w) =
@@ -367,8 +358,7 @@ object Graph {
     val wEdges = edges0.withColumn("w", lit(1))
       .unionByName(edges0.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst"), lit(0).as("w")))
-    val edges = cpKeyed(wEdges, "dst", rowBytes(2L * nPairs, 3))
-    cps += edges
+    val edges = cps.own(cpKeyed(wEdges, "dst", rowBytes(2L * nPairs, 3)))
     val nBound = 2L * nPairs
     val seeds = supplier.filter(col("s_nationkey") < 5)
       .select((col("s_suppkey") * 2).as("node"))
@@ -386,11 +376,11 @@ object Graph {
         .select(col("dst"), (col("dist") + col("w")).as("cand"))
         .groupBy("dst").agg(min("cand").as("dist"))
         .select(col("dst").as("node"), col("dist"))
-      if (it % 3 == 0 || it == rounds) dist = cp(dist)
+      if (it % 3 == 0 || it == rounds) dist = cps(dist)
     }
-    // Bounded histogram out; free the checkpoint working set (the
+    // Bounded histogram out, so the working set can be freed (the
     // pageRank rule).
-    val out = dist
+    dist
       .select(expr("CASE WHEN node % 2 = 0 THEN 'supplier' " +
         "ELSE 'customer' END").as("node_type"), col("dist"))
       .groupBy("node_type", "dist")
@@ -398,8 +388,7 @@ object Graph {
       .orderBy("node_type", "dist")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("node_type", "dist", "n_nodes")
+      .toSeq.toDF("node_type", "dist", "n_nodes")
   }
 
   /** The q78 oracle: the identical min-plus relaxation unrolled
@@ -463,25 +452,20 @@ object Graph {
     * ([[tradePairs]]).
     */
   def personalizedPageRankFrom(pairs: DataFrame, supplier: DataFrame,
-      iters: Int = 10, k: Int = 25): DataFrame = {
+      iters: Int = 10, k: Int = 25): DataFrame = Checkpoints.using { cps =>
     val s = pairs.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     val edges0 = bipartiteEdges(pairs)
     val outdeg = edges0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // dst-keyed materialization ([[cpKeyed]]): the per-round in-sum
     // aggregate reuses this one exchange. |edges| = 2·|pairs|.
     val nPairs = pairs.count()
     // Node-sized outdeg broadcast under the guard (the pageRank rule).
-    val edges = cpKeyed(edges0.join(bcastIf(outdeg, 2L * nPairs),
-      "src"), "dst", rowBytes(2L * nPairs, 3))
-    cps += edges
+    val edges = cps.own(cpKeyed(edges0.join(bcastIf(outdeg, 2L * nPairs),
+      "src"), "dst", rowBytes(2L * nPairs, 3)))
     val seedIds = supplier.filter(col("s_nationkey") < 5)
       .select((col("s_suppkey") * 2).as("node"))
-    val nodes = cp(edges.select(col("src").as("node")).distinct()
+    val nodes = cps(edges.select(col("src").as("node")).distinct()
       .join(broadcast(seedIds.withColumn("z", lit(1))), Seq("node"), "left")
       .select(col("node"), coalesce(col("z"), lit(0)).as("is_seed")))
     // One bounded fetch for BOTH counts (seed count for the teleport
@@ -490,41 +474,30 @@ object Graph {
       sum("is_seed").as("ns")).collect()(0)
     val n = cnts.getLong(0)
     val nSeeds = if (cnts.isNullAt(1)) 0L else cnts.getLong(1)
-    if (nSeeds == 0L) {
-      cps.foreach(Similarity.freeCheckpoint)
-      return Seq.empty[(Int, String, Long, Long)]
+    if (nSeeds == 0L)
+      Seq.empty[(Int, String, Long, Long)]
         .toDF("rnk", "node_type", "node_id", "r")
+    else {
+      val base = 1000000000000L / nSeeds
+      val teleport = (15L * base) / 100L
+      var ranks = cps(nodes.select(col("node"),
+        (col("is_seed") * base).as("r")))
+      for (it <- 1 to iters) {
+        // Node-sized build sides broadcast under the size guard — the
+        // [[prRounds]] round shape.
+        val insum = edges.join(bcastIf(ranks, n),
+            col("src") === col("node"))
+          .select(col("dst"), expr("r div outdeg").as("c"))
+          .groupBy("dst").agg(sum("c").as("insum"))
+        ranks = nodes.join(bcastIf(insum, n),
+            col("node") === col("dst"), "left")
+          .select(col("node"), col("is_seed"),
+            expr(s"is_seed * ${teleport}L + " +
+              "(85 * coalesce(insum, 0L)) div 100").as("r"))
+        if (it % 3 == 0 || it == iters) ranks = cps(ranks)
+      }
+      prTopK(ranks, k).toDF("rnk", "node_type", "node_id", "r")
     }
-    val base = 1000000000000L / nSeeds
-    val teleport = (15L * base) / 100L
-    var ranks = cp(nodes.select(col("node"),
-      (col("is_seed") * base).as("r")))
-    for (it <- 1 to iters) {
-      // Node-sized build sides broadcast under the size guard — the
-      // [[prRounds]] round shape.
-      val insum = edges.join(bcastIf(ranks, n),
-          col("src") === col("node"))
-        .select(col("dst"), expr("r div outdeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("insum"))
-      ranks = nodes.join(bcastIf(insum, n),
-          col("node") === col("dst"), "left")
-        .select(col("node"), col("is_seed"),
-          expr(s"is_seed * ${teleport}L + " +
-            "(85 * coalesce(insum, 0L)) div 100").as("r"))
-      if (it % 3 == 0 || it == iters) ranks = cp(ranks)
-    }
-    val out = ranks.orderBy(col("r").desc, col("node")).limit(k)
-      .withColumn("rnk",
-        row_number().over(Window.orderBy(col("r").desc, col("node"))))
-      .select(col("rnk"),
-        expr("CASE WHEN node % 2 = 0 THEN 'supplier' " +
-          "ELSE 'customer' END").as("node_type"),
-        expr("node div 2").as("node_id"), col("r"))
-      .orderBy("rnk")
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("rnk", "node_type", "node_id", "r")
   }
 
   /** The q81 oracle: [[sqlPageRank]] with the seeded teleport. */
@@ -614,16 +587,10 @@ object Graph {
 
   /** [[hits]] from a prebuilt pair table ([[tradePairs]]). */
   def hitsFrom(pairs: DataFrame,
-      iters: Int = 8, k: Int = 20): DataFrame = {
-    // Guard BEFORE the first checkpoint: on the failure path nothing
-    // has materialised yet, so nothing can leak.
+      iters: Int = 8, k: Int = 20): DataFrame = Checkpoints.using { cps =>
     require(iters >= 1, s"hits needs at least one half-round: $iters")
     val s = pairs.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     // TWO oriented materializations of the directed edge list (r20):
     // the authority half-round aggregates by dst, the hub half-round
     // by src — one dst-keyed and one src-keyed copy ([[cpKeyed]])
@@ -633,79 +600,76 @@ object Graph {
     // a deployment persists anyway).
     val nPairs = pairs.count()
     val directed = pairs.select(col("sk").as("src"), col("ck").as("dst"))
-    val edgesD = cpKeyed(directed, "dst", rowBytes(nPairs, 2))
-    cps += edgesD
-    val edgesH = cpKeyed(directed, "src", rowBytes(nPairs, 2))
-    cps += edgesH
+    val edgesD = cps.own(cpKeyed(directed, "dst", rowBytes(nPairs, 2)))
+    val edgesH = cps.own(cpKeyed(directed, "src", rowBytes(nPairs, 2)))
     // Broadcast-guard bound for the per-half-round score frames:
     // both are keyed by a node of the bipartite pair graph, so each
     // is ≤ the pair count.
     val nBound = nPairs
     // src-keyed copy: the distinct needs no exchange.
     val nh = edgesH.select("src").distinct().count()
-    if (nh == 0L) {
-      cps.foreach(Similarity.freeCheckpoint)
-      return Seq.empty[(String, Int, Long, Long)]
+    if (nh == 0L)
+      Seq.empty[(String, Int, Long, Long)]
         .toDF("kind", "rnk", "node_id", "score")
+    else {
+      // (raw · 10¹²) DIV Σraw in exact decimal — IntegralDivide returns
+      // LONG; the normalized mass sums to ≤ 10¹² by construction. BOTH
+      // folds (the per-node raw sum and the total) cast to
+      // DECIMAL(38,0) BEFORE summing — the oracle's HUGEINT class; a
+      // plain LONG fold would wrap silently past ~9·10¹⁸ (≈ a node
+      // with > 9·10⁶ full-mass neighbors). The total is FETCHED from
+      // the checkpointed raw frame (a 1-row driver aggregate over
+      // cached blocks) and embedded as a decimal literal, so each
+      // half-round's plan is one join + one aggregate — no
+      // crossJoin/broadcast-exchange subtree. (The r16 verdict's
+      // rollup-marker-row alternative trips Spark's
+      // DetectAmbiguousSelfJoin on the NEXT half-round's edges⋈auth
+      // join — rollup re-tags the grouping attribute — so the literal
+      // fetch is the workable form of the same trim.)
+      def normalize(raw: DataFrame, key: String): DataFrame = {
+        // 1-row aggregate fetch over the CHECKPOINT (no recompute
+        // behind it), embedded as an exact decimal literal — the same
+        // integral division, minus a crossJoin + broadcast exchange in
+        // every half-round's plan.
+        val tot = raw.agg(sum(col("raw")).as("tot"))
+          .collect()(0).getDecimal(0).toPlainString // never E-notation
+        raw.select(col(key).as("node"),
+          expr("CAST(CAST(raw AS DECIMAL(38,0)) * 1000000000000 " +
+            s"div CAST('$tot' AS DECIMAL(38,0)) AS BIGINT)")
+            .as("score"))
+      }
+      var hubs = cps(edgesH.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(1000000000000L / nh).as("score")))
+      var auth: DataFrame = null
+      for (_ <- 1 to iters) {
+        // Node-sized score frames broadcast under the size guard — the
+        // [[prRounds]] round shape applied to each half-round; each
+        // aggregate runs on the matching oriented edge copy, so neither
+        // half-round pays an exchange.
+        val araw = cps(edgesD.join(bcastIf(hubs, nBound),
+            col("src") === col("node"))
+          .groupBy("dst")
+          .agg(sum(col("score").cast("decimal(38,0)")).as("raw")))
+        auth = normalize(araw, "dst")
+        val hraw = cps(edgesH.join(bcastIf(auth, nBound),
+            col("dst") === col("node"))
+          .groupBy("src")
+          .agg(sum(col("score").cast("decimal(38,0)")).as("raw")))
+        hubs = normalize(hraw, "src")
+      }
+      def top(df: DataFrame, kind: String): DataFrame = df
+        .orderBy(col("score").desc, col("node")).limit(k)
+        .withColumn("rnk",
+          row_number().over(Window.orderBy(col("score").desc, col("node"))))
+        .select(lit(kind).as("kind"), col("rnk"),
+          col("node").as("node_id"), col("score"))
+      // Bounded (2k rows) out, so the working set can be freed.
+      top(hubs, "hub").unionByName(top(auth, "authority"))
+        .orderBy("kind", "rnk")
+        .collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+        .toSeq.toDF("kind", "rnk", "node_id", "score")
     }
-    // (raw · 10¹²) DIV Σraw in exact decimal — IntegralDivide returns
-    // LONG; the normalized mass sums to ≤ 10¹² by construction. BOTH
-    // folds (the per-node raw sum and the total) cast to
-    // DECIMAL(38,0) BEFORE summing — the oracle's HUGEINT class; a
-    // plain LONG fold would wrap silently past ~9·10¹⁸ (≈ a node
-    // with > 9·10⁶ full-mass neighbors). The total is FETCHED from
-    // the checkpointed raw frame (a 1-row driver aggregate over
-    // cached blocks) and embedded as a decimal literal, so each
-    // half-round's plan is one join + one aggregate — no
-    // crossJoin/broadcast-exchange subtree. (The r16 verdict's
-    // rollup-marker-row alternative trips Spark's
-    // DetectAmbiguousSelfJoin on the NEXT half-round's edges⋈auth
-    // join — rollup re-tags the grouping attribute — so the literal
-    // fetch is the workable form of the same trim.)
-    def normalize(raw: DataFrame, key: String): DataFrame = {
-      // 1-row aggregate fetch over the CHECKPOINT (no recompute
-      // behind it), embedded as an exact decimal literal — the same
-      // integral division, minus a crossJoin + broadcast exchange in
-      // every half-round's plan.
-      val tot = raw.agg(sum(col("raw")).as("tot"))
-        .collect()(0).getDecimal(0).toPlainString // never E-notation
-      raw.select(col(key).as("node"),
-        expr("CAST(CAST(raw AS DECIMAL(38,0)) * 1000000000000 " +
-          s"div CAST('$tot' AS DECIMAL(38,0)) AS BIGINT)")
-          .as("score"))
-    }
-    var hubs = cp(edgesH.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1000000000000L / nh).as("score")))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      // Node-sized score frames broadcast under the size guard — the
-      // [[prRounds]] round shape applied to each half-round; each
-      // aggregate runs on the matching oriented edge copy, so neither
-      // half-round pays an exchange.
-      val araw = cp(edgesD.join(bcastIf(hubs, nBound),
-          col("src") === col("node"))
-        .groupBy("dst")
-        .agg(sum(col("score").cast("decimal(38,0)")).as("raw")))
-      auth = normalize(araw, "dst")
-      val hraw = cp(edgesH.join(bcastIf(auth, nBound),
-          col("dst") === col("node"))
-        .groupBy("src")
-        .agg(sum(col("score").cast("decimal(38,0)")).as("raw")))
-      hubs = normalize(hraw, "src")
-    }
-    def top(df: DataFrame, kind: String): DataFrame = df
-      .orderBy(col("score").desc, col("node")).limit(k)
-      .withColumn("rnk",
-        row_number().over(Window.orderBy(col("score").desc, col("node"))))
-      .select(lit(kind).as("kind"), col("rnk"),
-        col("node").as("node_id"), col("score"))
-    // Bounded (2k rows) out; free the checkpoint working set.
-    val out = top(hubs, "hub").unionByName(top(auth, "authority"))
-      .orderBy("kind", "rnk")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("kind", "rnk", "node_id", "score")
   }
 
   /** The q83 oracle: the identical normalize-each-half-round integer
@@ -875,20 +839,16 @@ object Graph {
     kcoreFrom(derivePairs(lineitem, orders), rounds)
 
   /** [[kcore]] from a prebuilt pair table ([[tradePairs]]). */
-  def kcoreFrom(pairs: DataFrame, rounds: Int = 8): DataFrame = {
+  def kcoreFrom(pairs: DataFrame,
+      rounds: Int = 8): DataFrame = Checkpoints.using { cps =>
     val s = pairs.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     // dst-keyed materialization ([[cpKeyed]]): the per-round window
     // (partitionBy dst) AND the h aggregate (groupBy dst) both reuse
     // this one exchange — zero per-round shuffles.
-    val edges = cpKeyed(bipartiteEdges(pairs), "dst",
-      rowBytes(2L * pairs.count(), 2))
-    cps += edges
-    var core = cp(edges.groupBy("src").agg(count(lit(1)).as("c"))
+    val edges = cps.own(cpKeyed(bipartiteEdges(pairs), "dst",
+      rowBytes(2L * pairs.count(), 2)))
+    var core = cps(edges.groupBy("src").agg(count(lit(1)).as("c"))
       .select(col("src").as("node"), col("c")))
     // Node count for the per-round broadcast guard — block-local
     // count of the checkpointed node-sized frame.
@@ -915,11 +875,11 @@ object Graph {
       core = core.join(bcastIf(h, n), col("node") === col("dst"), "left")
         .select(col("node"),
           least(col("c"), coalesce(col("h"), lit(0L))).as("c"))
-      if (it % 3 == 0 || it == rounds) core = cp(core)
+      if (it % 3 == 0 || it == rounds) core = cps(core)
     }
-    // Bounded (node_type, coreness) histogram out; free the working
-    // set (the pageRank rule).
-    val out = core
+    // Bounded (node_type, coreness) histogram out, so the working set
+    // can be freed (the pageRank rule).
+    core
       .select(expr("CASE WHEN node % 2 = 0 THEN 'supplier' " +
         "ELSE 'customer' END").as("node_type"),
         col("c").as("coreness"))
@@ -928,8 +888,7 @@ object Graph {
       .orderBy("node_type", "coreness")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("node_type", "coreness", "n_nodes")
+      .toSeq.toDF("node_type", "coreness", "n_nodes")
   }
 
   /** The q85 oracle: the identical h-index recurrence unrolled
@@ -1003,13 +962,10 @@ object Graph {
     * distinct-after-filter).
     */
   def connectedComponentsFrom(pairs0: DataFrame, customer: DataFrame,
-      supplier: DataFrame, rounds: Int = 10): DataFrame = {
+      supplier: DataFrame,
+      rounds: Int = 10): DataFrame = Checkpoints.using { cps =>
     val s = pairs0.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
     val pairs = pairs0
       .join(broadcast(supplier.select(col("s_suppkey"),
         col("s_nationkey").as("sn"))),
@@ -1026,24 +982,30 @@ object Graph {
     // exchange on top of two broadcast builds; with the exchange
     // removed the broadcast form is strictly cheaper than both r18's
     // and r19's (A/B'd this round — see OPTIMIZATION_r20.md §1).
-    val edges = cpKeyed(withSelfLoops(bipartiteEdges(pairs)), "dst",
+    val edges = cps.own(cpKeyed(withSelfLoops(bipartiteEdges(pairs)),
+      "dst",
       // Size hint: the same-nation filter only shrinks the memoized
       // pair set, so 2·|pairs0| is a sound upper bound.
-      rowBytes(2L * pairs0.count(), 2))
-    cps += edges
+      rowBytes(2L * pairs0.count(), 2)))
     val nodes = edges.select(col("src").as("node")).distinct()
     val labels = relaxRounds(edges,
-      nodes.select(col("node"), col("node").as("label")), rounds, cp,
+      nodes.select(col("node"), col("node").as("label")), rounds, cps,
       edges.count())
-    // Bounded (size → count) histogram out; free the working set.
-    val out = labels.groupBy("label").agg(count(lit(1)).as("c_size"))
+    // Bounded (size → count) histogram out, so the working set can be
+    // freed.
+    componentSizes(labels).toDF("c_size", "n_components")
+  }
+
+  /** The bounded (c_size → n_components) histogram of a label frame —
+    * q80's and q88's output.
+    */
+  private def componentSizes(labels: DataFrame): Seq[(Long, Long)] =
+    labels.groupBy("label").agg(count(lit(1)).as("c_size"))
       .groupBy("c_size").agg(count(lit(1)).as("n_components"))
       .orderBy("c_size")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    cps.foreach(Similarity.freeCheckpoint)
-    out.toSeq.toDF("c_size", "n_components")
-  }
+      .toSeq
 
   /** Self-loop augmentation for the min-relaxation primitives (r20):
     * one (v, v) edge per node. With self-loops,
@@ -1153,10 +1115,6 @@ object Graph {
       Tables.load(s, dir, "supplier"),
       baseRounds, deltaRounds)
 
-  /** [[incrementalWcc]] from a prebuilt (sk, ck, d0) dated pair
-    * table — same-nation filtered like q80 (the filter commutes with
-    * the grouping: (sk, ck) determines both nations).
-    */
   /** The shared q88 split/seed machinery — same-nation filter, median
     * first-trade-day cut, base fixpoint PERSISTED to parquet and read
     * back, full edge set, seed frame. Used by the registered query
@@ -1172,12 +1130,9 @@ object Graph {
     */
   private def q88Seed(dated: DataFrame, customer: DataFrame,
       supplier: DataFrame, baseRounds: Int, deltaRounds: Int,
-      cp: DataFrame => DataFrame,
-      // Register an ALREADY-materialized frame (cpKeyed checkpoints
-      // itself) for the caller's end-of-query free.
-      reg: DataFrame => DataFrame): (DataFrame, DataFrame, Int, Long) = {
+      cps: Checkpoints): (DataFrame, DataFrame, Int, Long) = {
     val s = dated.sparkSession
-    val pairs = cp(dated
+    val pairs = cps(dated
       .join(broadcast(supplier.select(col("s_suppkey"),
         col("s_nationkey").as("sn"))),
         col("sk") === col("s_suppkey"))
@@ -1200,13 +1155,13 @@ object Graph {
     // min aggregate reuses the one exchange, both eras. Size hints
     // from the materialized same-nation pair count (base ≤ full).
     val nPairs = pairs.count()
-    val baseEdges = reg(cpKeyed(withSelfLoops(bipartiteEdges(
+    val baseEdges = cps.own(cpKeyed(withSelfLoops(bipartiteEdges(
       pairs.filter(col("d0") <= cut).select("sk", "ck"))), "dst",
       rowBytes(2L * nPairs, 2)))
     val baseNodes = baseEdges.select(col("src").as("node")).distinct()
     val baseLabels = relaxRounds(baseEdges,
       baseNodes.select(col("node"), col("node").as("label")),
-      baseRounds, cp,
+      baseRounds, cps,
       // |nodes| ≤ |edges|: block-local bound for the broadcast guard.
       baseEdges.count())
     val store = new java.io.File(SourceSinks.tmp("graft_q88"),
@@ -1215,14 +1170,14 @@ object Graph {
     val stored = s.read.schema("node BIGINT, label BIGINT")
       .parquet(store)
     // Today's run: full edge set, seeded from the STORED labels.
-    val edges = reg(cpKeyed(
+    val edges = cps.own(cpKeyed(
       withSelfLoops(bipartiteEdges(pairs.select("sk", "ck"))),
       "dst", rowBytes(2L * nPairs, 2)))
     val nodes = edges.select(col("src").as("node")).distinct()
     // The stored label frame is node-sized (≤ 2·|pairs| rows) —
     // broadcast it under the guard instead of sort-merging two
     // node-sized sides (r20).
-    val seeded = cp(nodes
+    val seeded = cps(nodes
       .join(bcastIf(stored.withColumnRenamed("node", "bn")
         .withColumnRenamed("label", "bl"), 2L * nPairs),
         col("node") === col("bn"), "left")
@@ -1231,47 +1186,39 @@ object Graph {
     (edges, seeded, rounds, seeded.count())
   }
 
+  /** [[incrementalWcc]] from a prebuilt (sk, ck, d0) dated pair
+    * table — same-nation filtered like q80 (the filter commutes with
+    * the grouping: (sk, ck) determines both nations).
+    */
   def incrementalWccFrom(dated: DataFrame, customer: DataFrame,
       supplier: DataFrame, baseRounds: Int = 10,
-      deltaRounds: Int = 6): DataFrame = {
+      deltaRounds: Int = 6): DataFrame = Checkpoints.using { cps =>
     val s = dated.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
-    def reg(df: DataFrame): DataFrame = { cps += df; df }
-    try {
-      val (edges, seeded, rounds, n) =
-        q88Seed(dated, customer, supplier, baseRounds, deltaRounds, cp,
-          reg)
-      val labels = relaxRounds(edges, seeded, rounds, cp, n)
-      // Convergence guard (the r17 verdict's insurance): the fixed
-      // `deltaRounds` budget is sound only while the delta's change
-      // diameter stays under it — a production delta that exceeds it
-      // would otherwise SILENTLY emit a non-fixpoint histogram. One
-      // extra relaxation round plus a bounded changed-row probe turns
-      // that into a loud error for the cost of one |E|-join job.
-      // Sum compare instead of a join probe (r20): labels only
-      // decrease, so the vector moved iff its LONG sum did — two
-      // block-local aggregates over checkpointed frames instead of a
-      // node-sized join.
-      def lsum(l: DataFrame): Long = l
-        .agg(coalesce(sum("label"), lit(0L))).collect()(0).getLong(0)
-      val extra = relaxRounds(edges, labels, 1, cp, n)
-      val moved = lsum(extra) != lsum(labels)
-      if (moved)
-        throw new IllegalStateException(
-          s"q88: labels still moving after $rounds seeded rounds — " +
-            "the delta's change diameter exceeds deltaRounds; raise it")
-      // Bounded (size → count) histogram out; free the working set.
-      val out = labels.groupBy("label").agg(count(lit(1)).as("c_size"))
-        .groupBy("c_size").agg(count(lit(1)).as("n_components"))
-        .orderBy("c_size")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      out.toSeq.toDF("c_size", "n_components")
-    } finally cps.foreach(Similarity.freeCheckpoint)
+    val (edges, seeded, rounds, n) =
+      q88Seed(dated, customer, supplier, baseRounds, deltaRounds, cps)
+    val labels = relaxRounds(edges, seeded, rounds, cps, n)
+    // Convergence guard (the r17 verdict's insurance): the fixed
+    // `deltaRounds` budget is sound only while the delta's change
+    // diameter stays under it — a production delta that exceeds it
+    // would otherwise SILENTLY emit a non-fixpoint histogram. One
+    // extra relaxation round plus a bounded changed-row probe turns
+    // that into a loud error for the cost of one |E|-join job.
+    // Sum compare instead of a join probe (r20): labels only
+    // decrease, so the vector moved iff its LONG sum did — two
+    // block-local aggregates over checkpointed frames instead of a
+    // node-sized join.
+    def lsum(l: DataFrame): Long = l
+      .agg(coalesce(sum("label"), lit(0L))).collect()(0).getLong(0)
+    val extra = relaxRounds(edges, labels, 1, cps, n)
+    val moved = lsum(extra) != lsum(labels)
+    if (moved)
+      throw new IllegalStateException(
+        s"q88: labels still moving after $rounds seeded rounds — " +
+          "the delta's change diameter exceeds deltaRounds; raise it")
+    // Bounded (size → count) histogram out, so the working set can be
+    // freed.
+    componentSizes(labels).toDF("c_size", "n_components")
   }
 
   /** (seeded, scratch) rounds-to-fixpoint on `dir`'s same-nation
@@ -1291,20 +1238,13 @@ object Graph {
 
   private[graft] def q88ConvergenceRoundsFrom(dated: DataFrame,
       customer: DataFrame, supplier: DataFrame,
-      baseRounds: Int = 10): (Int, Int) = {
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
-    def reg(df: DataFrame): DataFrame = { cps += df; df }
+      baseRounds: Int = 10): (Int, Int) = Checkpoints.using { cps =>
     val (edges, seeded, _, _) =
-      q88Seed(dated, customer, supplier, baseRounds, 6, cp, reg)
+      q88Seed(dated, customer, supplier, baseRounds, 6, cps)
     val scratch = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    val out = (wccRoundsToFixpoint(edges, seeded),
+    (wccRoundsToFixpoint(edges, seeded),
       wccRoundsToFixpoint(edges, scratch))
-    cps.foreach(Similarity.freeCheckpoint)
-    out
   }
 
   /** Min-label relaxation run to an OBSERVED fixpoint (loud cap) —
@@ -1366,24 +1306,20 @@ object Graph {
     * spec-scale only.
     */
   private[graft] def wccRoundsToFixpoint(edges0: DataFrame,
-      labels0: DataFrame, maxRounds: Int = 50): Int = {
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
-    val edges = cp(edges0)
-    var labels = cp(labels0)
+      labels0: DataFrame,
+      maxRounds: Int = 50): Int = Checkpoints.using { cps =>
+    val edges = cps(edges0)
+    var labels = cps(labels0)
     var r = 0
     var changed = true
     while (changed && r < maxRounds) {
-      val next = cp(relaxRounds(edges, labels, 1, identity))
+      val next = cps(relaxRounds(edges, labels, 1, identity))
       changed = next
         .join(labels.withColumnRenamed("label", "prev"), "node")
         .filter(col("label") =!= col("prev")).limit(1).count() > 0
       labels = next
       if (changed) r += 1
     }
-    cps.foreach(Similarity.freeCheckpoint)
     r
   }
 
@@ -1448,24 +1384,20 @@ object Graph {
       datedTradePairsCached(s, dir), baseIters, deltaIters, k)
 
   def incrementalPageRankFrom(dated0: DataFrame, baseIters: Int = 10,
-      deltaIters: Int = 4, k: Int = 25): DataFrame = {
+      deltaIters: Int = 4,
+      k: Int = 25): DataFrame = Checkpoints.using { cps =>
     val s = dated0.sparkSession
     import s.implicits._
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
-    def reg(df: DataFrame): DataFrame = { cps += df; df }
-    try {
-      val (edges, nodes, n, seeded, teleport) =
-        q89Seed(dated0, baseIters, cp, reg)
-      if (n == 0L)
-        return Seq.empty[(Int, String, Long, Long)]
-          .toDF("rnk", "node_type", "node_id", "r")
+    val (edges, nodes, n, seeded, teleport) =
+      q89Seed(dated0, baseIters, cps)
+    if (n == 0L)
+      Seq.empty[(Int, String, Long, Long)]
+        .toDF("rnk", "node_type", "node_id", "r")
+    else {
       val ranks = prRounds(edges, nodes, seeded, teleport,
-        deltaIters, cp, n)
+        deltaIters, cps, n)
       prTopK(ranks, k).toDF("rnk", "node_type", "node_id", "r")
-    } finally cps.foreach(Similarity.freeCheckpoint)
+    }
   }
 
   /** The shared q89 split/seed machinery — median-day cut, base
@@ -1475,14 +1407,10 @@ object Graph {
     * Factored so the registered query and the spec's stability meter
     * share one definition.
     */
-  private def q89Seed(dated0: DataFrame, baseIters: Int,
-      cp: DataFrame => DataFrame,
-      // Register an ALREADY-materialized frame (cpKeyed checkpoints
-      // itself) for the caller's end-of-query free.
-      reg: DataFrame => DataFrame)
+  private def q89Seed(dated0: DataFrame, baseIters: Int, cps: Checkpoints)
       : (DataFrame, DataFrame, Long, DataFrame, Long) = {
     val s = dated0.sparkSession
-    val dated = cp(dated0)
+    val dated = cps(dated0)
     // Median-day cut — a 1-row bounded fetch. floorDiv, not /: the
     // oracle's // FLOORS, and a negative day sum must agree (q87).
     val b = dated.agg(min("d0").as("mn"), max("d0").as("mx"))
@@ -1500,10 +1428,10 @@ object Graph {
     // in-sum aggregate reuses the one exchange, both eras. Size
     // hints from the materialized dated-pair count (base ≤ full).
     val nDated = dated.count()
-    val baseEdges = reg(cpKeyed(
+    val baseEdges = cps.own(cpKeyed(
       baseEdges0.join(bcastIf(baseOut, 2L * nDated), "src"), "dst",
       rowBytes(2L * nDated, 3)))
-    val baseNodes = cp(baseEdges.select(col("src").as("node"))
+    val baseNodes = cps(baseEdges.select(col("src").as("node"))
       .distinct())
     val nBase = baseNodes.count()
     val baseRanks =
@@ -1515,8 +1443,8 @@ object Graph {
       else {
         val bb = 1000000000000L / nBase
         prRounds(baseEdges, baseNodes,
-          cp(baseNodes.select(col("node"), lit(bb).as("r"))),
-          (15L * bb) / 100L, baseIters, cp, nBase)
+          cps(baseNodes.select(col("node"), lit(bb).as("r"))),
+          (15L * bb) / 100L, baseIters, cps, nBase)
       }
     val store = new java.io.File(SourceSinks.tmp("graft_q89"),
       "ranks").getAbsolutePath
@@ -1525,30 +1453,36 @@ object Graph {
     // Today's run: full edge set, seeded from the STORED ranks.
     val edges0 = bipartiteEdges(dated.select("sk", "ck"))
     val outdeg = edges0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edges = reg(cpKeyed(
+    val edges = cps.own(cpKeyed(
       edges0.join(bcastIf(outdeg, 2L * nDated), "src"), "dst",
       rowBytes(2L * nDated, 3)))
-    val nodes = cp(edges.select(col("src").as("node")).distinct())
+    val nodes = cps(edges.select(col("src").as("node")).distinct())
     val n = nodes.count()
     if (n == 0L) return (edges, nodes, 0L, nodes, 0L)
-    val base = 1000000000000L / n
-    val teleport = (15L * base) / 100L
-    // Exact integer rescale by nBase/n (see [[incrementalPageRank]]);
-    // all args non-negative, so div/% truncation = floor in both
-    // engines.
-    val seeded = cp(nodes
-      // The stored rank frame is node-sized (nBase ≤ n rows) —
-      // broadcast it under the guard (r20).
+    val teleport = (15L * (1000000000000L / n)) / 100L
+    // The stored rank frame is node-sized: nBase ≤ n rows.
+    val seeded = cps(rescaledSeed(nodes, stored, n, nBase, n))
+    (edges, nodes, n, seeded, teleport)
+  }
+
+  /** `nodes` seeded from a stored (node, r) rank vector over `nPrev`
+    * nodes: a stored rank rescaled EXACTLY by nPrev/n (see
+    * [[incrementalPageRank]]; all args non-negative, so div/%
+    * truncation = floor in both engines), a new node at the uniform
+    * 10¹² div n. The node-sized store broadcasts under the guard with
+    * `storeRows` as its row bound (r20).
+    */
+  private[graft] def rescaledSeed(nodes: DataFrame, stored: DataFrame,
+      n: Long, nPrev: Long, storeRows: Long): DataFrame =
+    nodes
       .join(bcastIf(stored.withColumnRenamed("node", "bn")
-        .withColumnRenamed("r", "br"), n),
+        .withColumnRenamed("r", "br"), storeRows),
         col("node") === col("bn"), "left")
       .select(col("node"),
         coalesce(
-          expr(s"(br div ${n}L) * ${nBase}L + " +
-            s"((br % ${n}L) * ${nBase}L) div ${n}L"),
-          lit(base)).as("r")))
-    (edges, nodes, n, seeded, teleport)
-  }
+          expr(s"(br div ${n}L) * ${nPrev}L + " +
+            s"((br % ${n}L) * ${nPrev}L) div ${n}L"),
+          lit(1000000000000L / n)).as("r"))
 
   /** Rounds of the rank recurrence until no node moves by more than
     * `tol` units — the spec's stability meter for q89 (the seeded
@@ -1557,26 +1491,20 @@ object Graph {
     */
   private[graft] def prRoundsToStable(edges: DataFrame,
       nodes: DataFrame, ranks0: DataFrame, teleport: Long, tol: Long,
-      maxRounds: Int = 60): Int = {
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
+      maxRounds: Int = 60): Int = Checkpoints.using { cps =>
+    var ranks = cps(ranks0)
+    var r = 0
+    var moving = true
+    while (moving && r < maxRounds) {
+      val next = cps(prRounds(edges, nodes, ranks, teleport, 1,
+        identity))
+      moving = next
+        .join(ranks.withColumnRenamed("r", "pr"), "node")
+        .filter(abs(col("r") - col("pr")) > tol).limit(1).count() > 0
+      ranks = next
+      if (moving) r += 1
     }
-    try {
-      var ranks = cp(ranks0)
-      var r = 0
-      var moving = true
-      while (moving && r < maxRounds) {
-        val next = cp(prRounds(edges, nodes, ranks, teleport, 1,
-          identity))
-        moving = next
-          .join(ranks.withColumnRenamed("r", "pr"), "node")
-          .filter(abs(col("r") - col("pr")) > tol).limit(1).count() > 0
-        ranks = next
-        if (moving) r += 1
-      }
-      r
-    } finally cps.foreach(Similarity.freeCheckpoint)
+    r
   }
 
   /** (seeded, scratch) rounds-to-stability on a dated pair table —
@@ -1585,22 +1513,16 @@ object Graph {
     * (stored-rank seed vs cold uniform). Spec-scale only.
     */
   private[graft] def q89ConvergenceRoundsFrom(dated: DataFrame,
-      baseIters: Int = 10, tolDivisor: Long = 1000L): (Int, Int) = {
-    val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); cps += c; c
-    }
-    def reg(df: DataFrame): DataFrame = { cps += df; df }
-    try {
-      val (edges, nodes, n, seeded, teleport) =
-        q89Seed(dated, baseIters, cp, reg)
-      require(n > 0L, "empty graph")
-      val base = 1000000000000L / n
-      val tol = math.max(1L, base / tolDivisor)
-      val cold = cp(nodes.select(col("node"), lit(base).as("r")))
-      (prRoundsToStable(edges, nodes, seeded, teleport, tol),
-        prRoundsToStable(edges, nodes, cold, teleport, tol))
-    } finally cps.foreach(Similarity.freeCheckpoint)
+      baseIters: Int = 10,
+      tolDivisor: Long = 1000L): (Int, Int) = Checkpoints.using { cps =>
+    val (edges, nodes, n, seeded, teleport) =
+      q89Seed(dated, baseIters, cps)
+    require(n > 0L, "empty graph")
+    val base = 1000000000000L / n
+    val tol = math.max(1L, base / tolDivisor)
+    val cold = cps(nodes.select(col("node"), lit(base).as("r")))
+    (prRoundsToStable(edges, nodes, seeded, teleport, tol),
+      prRoundsToStable(edges, nodes, cold, teleport, tol))
   }
 
   /** The q89 oracle: the ENTIRE incremental pipeline — cut, base

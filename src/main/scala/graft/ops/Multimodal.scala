@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SessionMemo, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
   * metadata, with decode/feature-extract stubs.
@@ -113,7 +113,7 @@ object Multimodal {
     * [[graft.SessionMemo]].
     */
   private val decodedMemo =
-    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
+    new SessionMemo[String, DataFrame](Checkpoints.free)
 
   /** The decoded-feature frame (doc_id, width, height, n_bytes, v) —
     * built ONCE per (session, dir) and localCheckpoint'd: the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SessionMemo, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -698,7 +698,7 @@ object Pipeline {
     * `documents`, and freeing: see [[graft.SessionMemo]].
     */
   private val gateMemo =
-    new SessionMemo[String, DataFrame](Similarity.freeCheckpoint)
+    new SessionMemo[String, DataFrame](Checkpoints.free)
 
   /** The p08 gate body, factored so p09's release step can consume
     * the same verdict frame; memoized per (session, dir) and pinned
@@ -709,7 +709,7 @@ object Pipeline {
       val (verdictFrame, lm) = admissionGateFresh(s, dir)
       val pinned = verdictFrame.localCheckpoint()
       // The pinned verdict supersedes the intermediate lm pin.
-      Similarity.freeCheckpoint(lm)
+      Checkpoints.free(lm)
       pinned
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SessionMemo, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-d).
@@ -38,33 +38,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
-  /** Free the cached blocks behind a superseded localCheckpoint'd
-    * frame: a checkpointed plan bottoms out in a persisted
-    * `LogicalRDD`, which `Dataset.unpersist` does not reach. Without
-    * this, per-round checkpoints in the Lloyd loops accumulate
-    * O(rounds) cached RDDs (tiny at the default round counts,
-    * unbounded for caller-supplied ones).
-    *
-    * Restricted to frames whose analyzed plan IS the checkpoint's
-    * `LogicalRDD` root — i.e. exactly what `.localCheckpoint()`
-    * returned. Walking a larger plan and unpersisting every
-    * LogicalRDD inside it could free blocks still referenced by
-    * OTHER live frames built on the same checkpoint; since
-    * checkpointing truncates lineage, those frames cannot recompute
-    * and would die at runtime with "block not found". Passing a
-    * composed plan therefore throws instead of guessing.
-    */
-  def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case other => throw new IllegalArgumentException(
-        "freeCheckpoint: expected a localCheckpoint'd frame " +
-          s"(LogicalRDD root), got ${other.nodeName} — freeing " +
-          "checkpoints reachable inside a composed plan risks " +
-          "unpersisting blocks shared with other live frames")
-    }
 
   /** ±1 weight for (hyperplane b, dim j ∈ 1..64): the parity of the
     * first hex digit of md5("b,j"). The planes are a MODEL CONSTANT —
@@ -610,7 +583,7 @@ object Similarity {
     while (i < maxIter && !converged) {
       val prevMeans = means
       means = updateMeans(assignClusters(e, cent)).localCheckpoint()
-      if (prevMeans != null) freeCheckpoint(prevMeans)
+      if (prevMeans != null) Checkpoints.free(prevMeans)
       val next = centroidArrays(means).coalesce(1).localCheckpoint()
       converged = next.as("n")
         .join(cent.as("o"), col("n.c_label") === col("o.c_label"), "full")
@@ -618,15 +591,15 @@ object Similarity {
           exists(zip_with(col("n.cv"), col("o.cv"),
             (a, b) => abs(a - b) > eps), b => b))
         .isEmpty
-      freeCheckpoint(cent) // the isEmpty above already consumed it
+      Checkpoints.free(cent) // the isEmpty above already consumed it
       cent = next
       i += 1
     }
     // The returned means is itself a checkpoint: the input and the
     // final centroid table are dead — free them rather than letting
     // them live as long as the caller holds the result.
-    freeCheckpoint(e)
-    freeCheckpoint(cent)
+    Checkpoints.free(e)
+    Checkpoints.free(cent)
     means
   }
 
@@ -733,46 +706,42 @@ object Similarity {
   def kcenterSeeds(e0: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"need at least two seeds, got $k")
     val s = e0.sparkSession
-    val e = e0.select(col("vec_id"), col("v")).localCheckpoint()
+    import s.implicits._
     def cvLit(vs: Seq[Double]): Column = array(vs.map(lit): _*)
     def sepTo(cv: Seq[Double]): Column =
       round(lit(1.0) - cosine(col("v"), cvLit(cv)), 6)
-    import s.implicits._
-    val firstOpt = e.orderBy("vec_id").limit(1).collect().headOption
-    if (firstOpt.isEmpty) {
-      // Empty corpus: nothing to seed. Same schema, zero rows — the
-      // 100 TB convention (empty partitions / empty filter results
-      // are routine) pinned by EmptyInputSpec.
-      freeCheckpoint(e)
-      return Seq.empty[(Int, Long, Option[Double])]
-        .toDF("rnk", "vec_id", "sep")
-        .withColumn("sep", col("sep").cast("double"))
-        .withColumn("radius", lit(null).cast("double"))
+    Checkpoints.using { cps =>
+      val e = cps(e0.select(col("vec_id"), col("v")))
+      e.orderBy("vec_id").limit(1).collect().headOption match {
+        case None =>
+          // Empty corpus: nothing to seed. Same schema, zero rows — the
+          // 100 TB convention (empty partitions / empty filter results
+          // are routine) pinned by EmptyInputSpec.
+          Seq.empty[(Int, Long, Option[Double])]
+            .toDF("rnk", "vec_id", "sep")
+            .withColumn("sep", col("sep").cast("double"))
+            .withColumn("radius", lit(null).cast("double"))
+        case Some(first) =>
+          var picked =
+            Vector[(Int, Long, Option[Double])]((1, first.getLong(0), None))
+          var state = cps(e.withColumn("md", sepTo(first.getSeq[Double](1))))
+          for (r <- 2 to k) {
+            val nxt = state.orderBy(col("md").desc, col("vec_id")).limit(1)
+              .collect()(0)
+            picked :+= ((r, nxt.getLong(0), Some(nxt.getDouble(2))))
+            val prev = state
+            state = cps(state.withColumn("md",
+              least(col("md"), sepTo(nxt.getSeq[Double](1)))))
+            cps.free(prev)
+          }
+          val radius = state.agg(max(col("md"))).collect()(0).getDouble(0)
+          picked.toDF("rnk", "vec_id", "sep")
+            .withColumn("radius", lit(radius))
+            .orderBy("rnk")
+      }
     }
-    val first = firstOpt.get
-    var picked =
-      Vector[(Int, Long, Option[Double])]((1, first.getLong(0), None))
-    var state = e
-      .withColumn("md", sepTo(first.getSeq[Double](1)))
-      .localCheckpoint()
-    for (r <- 2 to k) {
-      val nxt =
-        state.orderBy(col("md").desc, col("vec_id")).limit(1).collect()(0)
-      picked :+= ((r, nxt.getLong(0), Some(nxt.getDouble(2))))
-      val prev = state
-      state = state
-        .withColumn("md", least(col("md"), sepTo(nxt.getSeq[Double](1))))
-        .localCheckpoint()
-      freeCheckpoint(prev)
-    }
-    val radius = state.agg(max(col("md"))).collect()(0).getDouble(0)
-    freeCheckpoint(state)
-    freeCheckpoint(e)
-    import s.implicits._
-    picked.toDF("rnk", "vec_id", "sep")
-      .withColumn("radius", lit(radius))
-      .orderBy("rnk")
   }
+
 
   /** DuckDB restatement of [[kcenterSeeds]]: the greedy recursion
     * unrolled as CTE rounds (c_r = argmax of s_{r-1}'s min-distance,
@@ -949,7 +918,7 @@ object Similarity {
     (1 to rounds).foreach { _ =>
       val prev = cent
       cent = pqUpdate(pqAssign(sub, prev)).coalesce(1).localCheckpoint()
-      freeCheckpoint(prev) // superseded codebook — don't retain O(rounds)
+      Checkpoints.free(prev) // superseded codebook — don't retain O(rounds)
     }
     // Checkpoint the CODES (4 narrow rows per vector) and free the
     // subvector table (64 doubles per vector): the caller's lazy plan
@@ -958,7 +927,7 @@ object Similarity {
     // RDD for the session's lifetime.
     val codes = pqAssign(sub, cent).select("vec_id", "m", "code")
       .localCheckpoint()
-    freeCheckpoint(sub)
+    Checkpoints.free(sub)
     (cent, codes)
   }
 
@@ -1058,7 +1027,7 @@ object Similarity {
   private val ivfPqArtifacts = new SessionMemo[(String, Int),
     (DataFrame, DataFrame, DataFrame, DataFrame)]({
       case (coarse, cells, cb, codes) =>
-        Seq(coarse, cells, cb, codes).foreach(freeCheckpoint)
+        Seq(coarse, cells, cb, codes).foreach(Checkpoints.free)
     })
 
   /** The source paths the artifact memos fingerprint: the table
@@ -1069,8 +1038,8 @@ object Similarity {
 
   /** Frees both checkpointed halves of a two-artifact build. */
   private def freePair(p: (DataFrame, DataFrame)): Unit = {
-    freeCheckpoint(p._1)
-    freeCheckpoint(p._2)
+    Checkpoints.free(p._1)
+    Checkpoints.free(p._2)
   }
 
   /** [[ivfPqTrain]] with the per-session artifact memo above. `e` is
@@ -1101,7 +1070,7 @@ object Similarity {
         (0 until 4).map(i => planeBit(col("v"), i, i)).reduce(_ + _))
     val (cb, codes) = pqTrain(res, rounds)
     val cells = assigned.select("vec_id", "cluster").localCheckpoint()
-    freeCheckpoint(assigned)
+    Checkpoints.free(assigned)
     (coarse, cells, cb, codes)
   }
 
@@ -1461,7 +1430,7 @@ object Similarity {
     val codes = sq8Encode(e, params)
       .join(e.select(col("vec_id"), col("label")), "vec_id")
       .localCheckpoint()
-    freeCheckpoint(params) // the eager checkpoint above holds the codes
+    Checkpoints.free(params) // the eager checkpoint above holds the codes
     (centroids, codes)
   }
 
@@ -2337,19 +2306,18 @@ object Similarity {
     * Output: (rnk, vec_id, rel, score) — score as at selection time.
     */
   def mmrRerank(e0: DataFrame, kCand: Int, k: Int,
-      lam: Double, mu: Double): DataFrame = {
+      lam: Double, mu: Double): DataFrame = Checkpoints.using { cps =>
     val s = e0.sparkSession
     import s.implicits._
     val e = e0.filter(col("v").isNotNull)
     def cvLit(vs: Seq[Double]): Column = array(vs.map(lit): _*)
     val q = e.filter(col("vec_id") === 0L).select(col("v").as("qv"))
-    var state = e.filter(col("vec_id") =!= 0L)
+    var state = cps(e.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("v"),
         round(cosine(col("v"), col("qv")), 6).as("rel"))
       .orderBy(col("rel").desc, col("vec_id")).limit(kCand)
-      .withColumn("ms", lit(0.0))
-      .localCheckpoint()
+      .withColumn("ms", lit(0.0)))
     var picked = Vector.empty[(Int, Long, Double, Double)]
     var exhausted = false
     for (r <- 1 to k if !exhausted) {
@@ -2365,14 +2333,12 @@ object Similarity {
             row.getDouble(row.fieldIndex("score"))))
           val cv = row.getSeq[Double](1)
           val prev = state
-          state = state.filter(col("vec_id") =!= row.getLong(0))
+          state = cps(state.filter(col("vec_id") =!= row.getLong(0))
             .withColumn("ms",
-              greatest(col("ms"), round(cosine(col("v"), cvLit(cv)), 6)))
-            .localCheckpoint()
-          freeCheckpoint(prev)
+              greatest(col("ms"), round(cosine(col("v"), cvLit(cv)), 6))))
+          cps.free(prev)
       }
     }
-    freeCheckpoint(state)
     picked.toDF("rnk", "vec_id", "rel", "score").orderBy("rnk")
   }
 

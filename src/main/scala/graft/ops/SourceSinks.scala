@@ -1,12 +1,13 @@
 package graft.ops
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Oracle-checked round trips through the non-parquet sources/sinks
   * (SURVEY §2.2 "sources/sinks beyond parquet"): each query WRITES a
@@ -34,15 +35,21 @@ object SourceSinks {
     f.delete()
   }
 
-  // deleteOnExit only removes EMPTY directories — a filled temp dir
-  // would leak per invocation in long-lived sessions (Bench runs each
-  // query twice). A shutdown hook with a recursive delete actually
-  // cleans up. (Shared with the streaming file-sink runner, st08.)
-  private[graft] def tmp(prefix: String): File = {
-    val d = Files.createTempDirectory(prefix).toFile
-    sys.addShutdownHook(deleteRecursively(d))
+  // deleteOnExit only removes EMPTY directories, so every temp dir
+  // lives under one per-JVM root whose single shutdown hook deletes it
+  // recursively. The root is this JVM's alone: a counter names its
+  // dirs uniquely, and keeps the paths short enough that a plan's
+  // abbreviated scan location still shows the table directory.
+  private lazy val tmpRoot: Path = {
+    val d = Files.createTempDirectory("graft_tmp")
+    sys.addShutdownHook(deleteRecursively(d.toFile))
     d
   }
+
+  private val tmpCount = new AtomicLong
+
+  private[graft] def tmp(prefix: String): File = Files.createDirectory(
+    tmpRoot.resolve(prefix + tmpCount.incrementAndGet())).toFile
 
   private def t(s: SparkSession, dir: String)(name: String): DataFrame =
     Tables.load(s, dir, name)
@@ -1028,17 +1035,19 @@ object SourceSinks {
     val (mn, mx) = (b.getLong(0), b.getLong(1))
     // Integer slice id: (us - mn) * slices DIV span — slices time
     // ranges standing in for micro-batch commit boundaries.
-    val sliced = ev
-      .withColumn("bucket", (col("user_id") % 8).cast("int"))
-      .withColumn("slice",
-        expr(s"CAST(((us - ${mn}L) * $slices) DIV ${mx - mn + 1}L AS INT)"))
-      .localCheckpoint() // 6 slice filters below reuse one scan
-    for (i <- 0 until slices)
-      sliced.filter(col("slice") === i)
-        .select(col("user_id"), col("us"), col("event_id"),
-          col("value"), col("bucket"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("append").parquet(data1)
+    Checkpoints.using { cps =>
+      val sliced = cps(ev
+        .withColumn("bucket", (col("user_id") % 8).cast("int"))
+        .withColumn("slice", expr(
+          s"CAST(((us - ${mn}L) * $slices) DIV ${mx - mn + 1}L AS INT)")))
+      // The slice filters reuse one scan.
+      for (i <- 0 until slices)
+        sliced.filter(col("slice") === i)
+          .select(col("user_id"), col("us"), col("event_id"),
+            col("value"), col("bucket"))
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").mode("append").parquet(data1)
+    }
     // Planning stats — the manifest's file-level metadata (row count
     // + min timestamp per file), ≤ slices·|buckets| rows.
     val stats = s.read.schema(lakeSchema).parquet(data1)
@@ -1071,7 +1080,6 @@ object SourceSinks {
       .parquet(data2)
       .select(col("bucket"), input_file_name().as("f")).distinct()
       .collect().map(r => (r.getInt(0), r.getString(1)))
-    Similarity.freeCheckpoint(sliced)
     // Both snapshots read back VIA THEIR MANIFESTS (explicit path
     // lists — the swap is which list a reader gets), with physical
     // per-bucket file counts from the manifests themselves.

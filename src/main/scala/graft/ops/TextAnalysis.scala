@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SessionMemo, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over `documents`: language ID (marker-word
@@ -447,15 +447,15 @@ object TextAnalysis {
     * (the merged pair must become a plan literal), same scale class
     * as d08's convergence probe. Returns (step, lhs, rhs, n).
     */
-  def bpeInduce(documents: DataFrame, merges: Int): DataFrame = {
+  def bpeInduce(documents: DataFrame,
+      merges: Int): DataFrame = Checkpoints.using { cps =>
     val spark = documents.sparkSession
-    var vocab = documents
+    var vocab = cps(documents
       .filter(col("text").isNotNull)
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(filter(split(col("w"), ""), c => length(c) > 0).as("syms"),
-        col("freq"))
-      .localCheckpoint()
+        col("freq")))
     val out = Seq.newBuilder[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -477,9 +477,10 @@ object TextAnalysis {
       } else {
         val (x, y) = (top(0).getString(0), top(0).getString(1))
         out += ((step, x, y, top(0).getLong(2)))
-        vocab = vocab
-          .select(applyMerge(col("syms"), x, y).as("syms"), col("freq"))
-          .localCheckpoint()
+        val prev = vocab
+        vocab = cps(vocab
+          .select(applyMerge(col("syms"), x, y).as("syms"), col("freq")))
+        cps.free(prev)
         step += 1
       }
     }
@@ -1216,11 +1217,13 @@ object TextAnalysis {
           .as("x3"))
 
   private def classifierFitFresh(documents: DataFrame, seed: String,
-      iters: Int, lr: Double): Option[(DataFrame, Array[Double])] = {
+      iters: Int, lr: Double): Option[(DataFrame, Array[Double])] =
+      Checkpoints.using { cps =>
     def featFrame = classifierFeatures(documents, seed)
-    val feats = featFrame.localCheckpoint()
+    val feats = cps(featFrame)
     val w = Array(0.0, 0.0, 0.0, 0.0)
-    for (_ <- 1 to iters) {
+    var empty = false
+    for (_ <- 1 to iters if !empty) {
       val rc = col("y") - classifierSigmoid(classifierZ(w))
       val row = feats.select(
         sum(rc.cast("decimal(18,12)")).as("g0"),
@@ -1229,18 +1232,15 @@ object TextAnalysis {
         sum((rc * col("x3")).cast("decimal(18,12)")).as("g3"),
         count(lit(1)).as("n")).collect()(0) // 1-row bounded fetch
       val n = row.getLong(4)
-      if (n == 0L) {
-        graft.ops.Similarity.freeCheckpoint(feats)
-        return None
-      }
-      for (j <- 0 to 3)
-        w(j) += lr * (row.getDecimal(j).doubleValue / n.toDouble)
+      empty = n == 0L
+      if (!empty)
+        for (j <- 0 to 3)
+          w(j) += lr * (row.getDecimal(j).doubleValue / n.toDouble)
     }
     // Score from the UN-checkpointed plan so the training working
     // set can be freed (the output is corpus-sized — it cannot be
     // collected and returned as literals like the graph ops').
-    graft.ops.Similarity.freeCheckpoint(feats)
-    Some((featFrame, w))
+    if (empty) None else Some((featFrame, w))
   }
 
   private[graft] def sqlClassifierZ(w: String): String =

@@ -1042,7 +1042,7 @@ object EventStream {
       .partitionBy("bucket")
       .mode("overwrite")
       .parquet(root)
-    graft.ops.Similarity.freeCheckpoint(merged)
+    graft.Checkpoints.free(merged)
   }
 
   /** Streaming CDC → partitioned lake MERGE (st28) — the lakehouse
@@ -1523,42 +1523,35 @@ object EventStream {
       * checkpointed before the write, so overwriting the storage it
       * was seeded from is safe).
       */
-    def refresh(): Unit = {
-      val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      def cp(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(); cps += c; c
-      }
-      try {
-        // dst-keyed materialization (Graph.cpKeyed): every relax
-        // round's min aggregate inside relaxToFixpoint reuses this
-        // one exchange. cpKeyed checkpoints itself — register only.
-        // Size hint: lake parquet bytes × 8 (decode + both-direction
-        // doubling) — a driver-side listing, no job.
-        val edges = graft.ops.Graph.cpKeyed(
-          graft.ops.Graph.withSelfLoops(
-            graft.ops.Graph.bipartiteEdges(readPairs())), "dst",
-          8L * dirParquetBytes(pairsDir))
-        cps += edges
-        val nodes = edges.select(col("src").as("node")).distinct()
-        // The label store is node-sized — broadcast it under the
-        // guard; the row bound derives from the store's parquet
-        // bytes (2-LONG rows never compress below ~4 B/row, so
-        // bytes/4 over-estimates rows — conservative).
-        val seeded = nodes
-          .join(graft.ops.Graph.bcastIf(
-            readLabels().withColumnRenamed("node", "bn")
-              .withColumnRenamed("label", "bl"),
-            dirParquetBytes(labelsDir) / 4),
-            col("node") === col("bn"), "left")
-          .select(col("node"),
-            coalesce(col("bl"), col("node")).as("label"))
-        val converged = graft.ops.Graph.relaxToFixpoint(
-          edges, seeded, maxRounds, cp)
-        converged.write.mode("overwrite")
-          .parquet(labelsDir.getAbsolutePath)
-        refreshes += 1
-        pendingSinceRefresh = 0
-      } finally cps.foreach(graft.ops.Similarity.freeCheckpoint)
+    def refresh(): Unit = graft.Checkpoints.using { cps =>
+      // dst-keyed materialization (Graph.cpKeyed): every relax
+      // round's min aggregate inside relaxToFixpoint reuses this
+      // one exchange. cpKeyed checkpoints itself — `cps` only owns
+      // it. Size hint: lake parquet bytes × 8 (decode + both-direction
+      // doubling) — a driver-side listing, no job.
+      val edges = cps.own(graft.ops.Graph.cpKeyed(
+        graft.ops.Graph.withSelfLoops(
+          graft.ops.Graph.bipartiteEdges(readPairs())), "dst",
+        8L * dirParquetBytes(pairsDir)))
+      val nodes = edges.select(col("src").as("node")).distinct()
+      // The label store is node-sized — broadcast it under the
+      // guard; the row bound derives from the store's parquet
+      // bytes (2-LONG rows never compress below ~4 B/row, so
+      // bytes/4 over-estimates rows — conservative).
+      val seeded = nodes
+        .join(graft.ops.Graph.bcastIf(
+          readLabels().withColumnRenamed("node", "bn")
+            .withColumnRenamed("label", "bl"),
+          dirParquetBytes(labelsDir) / 4),
+          col("node") === col("bn"), "left")
+        .select(col("node"),
+          coalesce(col("bl"), col("node")).as("label"))
+      val converged = graft.ops.Graph.relaxToFixpoint(
+        edges, seeded, maxRounds, cps)
+      converged.write.mode("overwrite")
+        .parquet(labelsDir.getAbsolutePath)
+      refreshes += 1
+      pendingSinceRefresh = 0
     }
 
     /** Refresh only if commits landed since the last one — the
@@ -1577,6 +1570,51 @@ object EventStream {
         .orderBy("c_size")
   }
 
+  /** The stream of st34 and st36: `dated`'s (sk, ck) pairs split into
+    * 6 first-trade-day slices (null-day pairs route to slice 0 — the
+    * st32 rule), written under `base` and streamed one file per
+    * trigger into `append`. Nothing streams when `dated` is empty.
+    */
+  private def streamDaySlices(spark: SparkSession, base: java.io.File,
+      dated: DataFrame, append: (DataFrame, Long) => Unit): Unit = {
+    val input = new java.io.File(base, "input").getAbsolutePath
+    val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
+    val b = dated.agg(min("d0").as("mn"), max("d0").as("mx"),
+      count(lit(1)).as("n")).collect()(0) // 1-row bounded fetch
+    if (b.getLong(2) > 0) {
+      val slices = 6
+      val sliceExpr =
+        if (b.isNullAt(0)) lit(0)
+        else {
+          val (mn, mx) = (b.getLong(0), b.getLong(1))
+          coalesce(expr(
+            s"CAST(((d0 - ${mn}L) * $slices) DIV ${mx - mn + 1}L AS INT)"),
+            lit(0))
+        }
+      // writeSlices pins the order — st36's oracle needs batch i ⟺
+      // slice i.
+      writeSlices(dated.select(col("sk"), col("ck"),
+        sliceExpr.as("slice")), slices, input)
+      withStreamShufflePartitions(spark, 8) {
+        val q = spark.readStream
+          .schema("sk BIGINT, ck BIGINT")
+          .option("recursiveFileLookup", "true")
+          .option("pathGlobFilter", "*.parquet")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(input)
+          .writeStream
+          .foreachBatch {
+            (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
+              append(batch.toDF(), bid)
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+    }
+  }
+
   /** Streaming WCC maintenance end-to-end (st34): the same-nation
     * dated trade pairs (q88's pair set) split into 6 first-trade-day
     * slices (null-day pairs route to slice 0 — the st32 rule) and
@@ -1590,52 +1628,20 @@ object EventStream {
   def runStreamWccMaintenance(spark: SparkSession,
       dir: String): DataFrame = {
     val base = graft.ops.SourceSinks.tmp("graft_st34")
-    val input = new java.io.File(base, "input").getAbsolutePath
-    val root = new java.io.File(base, "lake").getAbsolutePath
-    val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-    val dated = graft.ops.Graph.datedTradePairsCached(spark, dir)
-      .join(broadcast(graft.Tables.load(spark, dir, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey").as("sn"))),
-        col("sk") === col("s_suppkey"))
-      .join(graft.Tables.load(spark, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey").as("cn")),
-        col("ck") === col("c_custkey"))
-      .filter(col("sn") === col("cn"))
-      .select(col("sk"), col("ck"), col("d0"))
-    val b = dated.agg(min("d0").as("mn"), max("d0").as("mx"),
-      count(lit(1)).as("n")).collect()(0) // 1-row bounded fetch
-    val lake = new WccLabelLake(spark, root, every = 2)
-    if (b.getLong(2) > 0) {
-      val slices = 6
-      val sliceExpr =
-        if (b.isNullAt(0)) lit(0)
-        else {
-          val (mn, mx) = (b.getLong(0), b.getLong(1))
-          coalesce(expr(
-            s"CAST(((d0 - ${mn}L) * $slices) DIV ${mx - mn + 1}L AS INT)"),
-            lit(0))
-        }
-      writeSlices(dated.select(col("sk"), col("ck"),
-        sliceExpr.as("slice")), slices, input)
-      withStreamShufflePartitions(spark, 8) {
-        val q = spark.readStream
-          .schema("sk BIGINT, ck BIGINT")
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(input)
-          .writeStream
-          .foreachBatch {
-            (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-              lake.append(batch.toDF(), bid)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      lake.refreshIfPending() // commits after the last cadence point
-    }
+    val lake = new WccLabelLake(spark,
+      new java.io.File(base, "lake").getAbsolutePath, every = 2)
+    streamDaySlices(spark, base,
+      graft.ops.Graph.datedTradePairsCached(spark, dir)
+        .join(broadcast(graft.Tables.load(spark, dir, "supplier")
+          .select(col("s_suppkey"), col("s_nationkey").as("sn"))),
+          col("sk") === col("s_suppkey"))
+        .join(graft.Tables.load(spark, dir, "customer")
+          .select(col("c_custkey"), col("c_nationkey").as("cn")),
+          col("ck") === col("c_custkey"))
+        .filter(col("sn") === col("cn"))
+        .select(col("sk"), col("ck"), col("d0")),
+      lake.append)
+    lake.refreshIfPending() // commits after the last cadence point
     lake.labelsHistogram()
   }
 
@@ -1724,56 +1730,41 @@ object EventStream {
       * the write, so overwriting the storage it was seeded from is
       * safe.
       */
-    def refresh(): Unit = {
-      val cps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      def cp(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(); cps += c; c
-      }
-      try {
-        val edges0 = graft.ops.Graph.bipartiteEdges(readPairs())
-        val outdeg = edges0.groupBy("src")
-          .agg(count(lit(1)).as("outdeg"))
-        // dst-keyed materialization (Graph.cpKeyed): every rank
-        // round's in-sum aggregate reuses this one exchange. cpKeyed
-        // checkpoints itself — register only. Size hint: lake parquet
-        // bytes × 8 (decode + both-direction doubling), no job.
-        // Node-sized outdeg broadcast under the guard; the row
-        // bound derives from the pair lake's bytes (2-LONG rows
-        // never compress below ~4 B/row, so bytes/4 over-estimates).
-        val edges = graft.ops.Graph.cpKeyed(
-          edges0.join(graft.ops.Graph.bcastIf(outdeg,
-            dirParquetBytes(pairsDir) / 4), "src"), "dst",
-          8L * dirParquetBytes(pairsDir))
-        cps += edges
-        val nodes = cp(edges.select(col("src").as("node")).distinct())
-        val n = nodes.count() // 1-row bounded fetch (node count)
-        if (n == 0L) { pendingSinceRefresh = 0; return }
+    def refresh(): Unit = graft.Checkpoints.using { cps =>
+      val edges0 = graft.ops.Graph.bipartiteEdges(readPairs())
+      val outdeg = edges0.groupBy("src")
+        .agg(count(lit(1)).as("outdeg"))
+      // dst-keyed materialization (Graph.cpKeyed): every rank
+      // round's in-sum aggregate reuses this one exchange. cpKeyed
+      // checkpoints itself — `cps` only owns it. Size hint: lake
+      // parquet bytes × 8 (decode + both-direction doubling), no job.
+      // Node-sized outdeg broadcast under the guard; the row
+      // bound derives from the pair lake's bytes (2-LONG rows
+      // never compress below ~4 B/row, so bytes/4 over-estimates).
+      val edges = cps.own(graft.ops.Graph.cpKeyed(
+        edges0.join(graft.ops.Graph.bcastIf(outdeg,
+          dirParquetBytes(pairsDir) / 4), "src"), "dst",
+        8L * dirParquetBytes(pairsDir)))
+      val nodes = cps(edges.select(col("src").as("node")).distinct())
+      val n = nodes.count() // 1-row bounded fetch (node count)
+      if (n > 0L) {
         val base = 1000000000000L / n
         val teleport = (15L * base) / 100L
         val (seed, iters) =
           if (!ranksDir.exists())
-            (cp(nodes.select(col("node"), lit(base).as("r"))), baseIters)
+            (cps(nodes.select(col("node"), lit(base).as("r"))), baseIters)
           else {
             val stored = readRanks()
             val nPrev = stored.count() // node-sized store, bounded
-            (cp(nodes
-              // node-sized store — broadcast under the guard (r20)
-              .join(graft.ops.Graph.bcastIf(
-                stored.withColumnRenamed("node", "bn")
-                  .withColumnRenamed("r", "br"), nPrev),
-                col("node") === col("bn"), "left")
-              .select(col("node"),
-                coalesce(
-                  expr(s"(br div ${n}L) * ${nPrev}L + " +
-                    s"((br % ${n}L) * ${nPrev}L) div ${n}L"),
-                  lit(base)).as("r"))), deltaIters)
+            (cps(graft.ops.Graph.rescaledSeed(nodes, stored, n, nPrev,
+              nPrev)), deltaIters)
           }
         val ranks = graft.ops.Graph.prRounds(edges, nodes, seed,
-          teleport, iters, cp, n) // final round is cp'd by prRounds
+          teleport, iters, cps, n) // final round is cp'd by prRounds
         ranks.write.mode("overwrite").parquet(ranksDir.getAbsolutePath)
         refreshes += 1
-        pendingSinceRefresh = 0
-      } finally cps.foreach(graft.ops.Similarity.freeCheckpoint)
+      }
+      pendingSinceRefresh = 0
     }
 
     /** Refresh only if commits landed since the last one — the
@@ -1807,45 +1798,11 @@ object EventStream {
   def runStreamPagerankMaintenance(spark: SparkSession,
       dir: String): DataFrame = {
     val base = graft.ops.SourceSinks.tmp("graft_st36")
-    val input = new java.io.File(base, "input").getAbsolutePath
-    val root = new java.io.File(base, "lake").getAbsolutePath
-    val ckpt = new java.io.File(base, "ckpt").getAbsolutePath
-    val dated = graft.ops.Graph.datedTradePairsCached(spark, dir)
-    val b = dated.agg(min("d0").as("mn"), max("d0").as("mx"),
-      count(lit(1)).as("n")).collect()(0) // 1-row bounded fetch
-    val lake = new RankLake(spark, root, every = 2)
-    if (b.getLong(2) > 0) {
-      val slices = 6
-      val sliceExpr =
-        if (b.isNullAt(0)) lit(0)
-        else {
-          val (mn, mx) = (b.getLong(0), b.getLong(1))
-          coalesce(expr(
-            s"CAST(((d0 - ${mn}L) * $slices) DIV ${mx - mn + 1}L AS INT)"),
-            lit(0))
-        }
-      // writeSlices pins the order — the oracle needs batch i ⟺ slice i.
-      writeSlices(dated.select(col("sk"), col("ck"),
-        sliceExpr.as("slice")), slices, input)
-      withStreamShufflePartitions(spark, 8) {
-        val q = spark.readStream
-          .schema("sk BIGINT, ck BIGINT")
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(input)
-          .writeStream
-          .foreachBatch {
-            (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-              lake.append(batch.toDF(), bid)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      lake.refreshIfPending() // commits after the last cadence point
-    }
+    val lake = new RankLake(spark,
+      new java.io.File(base, "lake").getAbsolutePath, every = 2)
+    streamDaySlices(spark, base,
+      graft.ops.Graph.datedTradePairsCached(spark, dir), lake.append)
+    lake.refreshIfPending() // commits after the last cadence point
     lake.topK(25)
   }
 

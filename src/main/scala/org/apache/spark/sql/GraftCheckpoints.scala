@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{RDD, RDDOperationScope}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
@@ -37,10 +39,34 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `Dataset.ofRows` are `private[sql]`; uses only stable executor
   * behavior (the same `.map(_.copy())` + localCheckpoint sequence as
   * `Dataset.localCheckpoint` itself). The returned frame's analyzed
-  * root is a `LogicalRDD`, so the repo's `freeCheckpoint` discipline
-  * (unpersist the root RDD) applies unchanged.
+  * root is a `LogicalRDD`, so `graft.Checkpoints` owns and frees it
+  * (unpersist the root RDD) like any other checkpoint.
   */
 object GraftCheckpoints {
+
+  /** `body`'s value; when `body` throws, `onFailure` first gets the
+    * still-persisted RDDs `body` built on this thread. A checkpoint
+    * persists its RDD BEFORE the job that fills it, so a failed job
+    * leaves that RDD pinned. `body` runs under one fresh operation
+    * scope; plan operators set their own, so only the RDDs `body`
+    * builds itself (the checkpoint's `map(_.copy())`) carry it.
+    */
+  def onFailurePersisted[T](sc: SparkContext)(
+      onFailure: Seq[RDD[_]] => Unit)(body: => T): T = {
+    val keys = Seq(SparkContext.RDD_SCOPE_KEY,
+      SparkContext.RDD_SCOPE_NO_OVERRIDE_KEY)
+    def set(values: Seq[String]): Unit =
+      keys.zip(values).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    val old = keys.map(sc.getLocalProperty)
+    val scope = new RDDOperationScope("localCheckpoint")
+    set(Seq(scope.toJson, "true"))
+    try body
+    catch { case e: Throwable =>
+      onFailure(sc.getPersistentRDDs.values.toSeq
+        .filter(_.scope.exists(_.id == scope.id)))
+      throw e
+    } finally set(old)
+  }
 
   /** Materialize `df` hash-partitioned by `key` into `n` partitions,
     * localCheckpoint it, and return a frame that REMEMBERS the

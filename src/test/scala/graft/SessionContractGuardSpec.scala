@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[SessionMemo]] the only session-scoped memo: main code that reuses
   * an artifact across calls goes through it. Keeps [[etl.Overlapped]]'s
   * parse pool the only threads the ETL starts: nothing else of
-  * `graft.etl` runs beside the task thread that owns Spark's resources. Keeps the entry
+  * `graft.etl` runs beside the task thread that owns Spark's resources. Keeps
+  * [[Checkpoints]] the only owner that frees a checkpoint. Keeps the entry
   * points to the registry runners and the ETL: a new experiment is a
   * spec or a recorded A/B, not another `main`.
   */
@@ -56,6 +57,12 @@ class SessionContractGuardSpec extends AnyFunSuite {
 
   test("only SessionMemo holds a TrieMap: every session-scoped memo goes through it") {
     val found = hits(Set("SessionMemo.scala"), Seq("TrieMap"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("only Checkpoints frees a checkpoint") {
+    val found = hits(Set("Checkpoints.scala"),
+      Seq("freeCheckpoint", ".unpersist(", "ArrayBuffer[DataFrame]"))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions.col
 
-import graft.{SparkSpec, SparkEntry}
+import graft.{Checkpoints, SparkSpec, SparkEntry}
 
 /** Physical-plan audits: the properties that make these queries
   * scale — filter pushdown, column pruning, broadcast dims, map-side
@@ -359,7 +359,7 @@ class PlanSpec extends SparkSpec {
     // scan), so pin the plan of the UNDERLYING construction.
     val (gate, lm) = Pipeline.admissionGateFresh(spark, dir)
     val p = gate.queryExecution.executedPlan.toString
-    Similarity.freeCheckpoint(lm)
+    Checkpoints.free(lm)
     // d20's contamination probe inside the gate: the tiny eval gram
     // set broadcasts — the corpus side never shuffles by gram
     assert(p.contains("BroadcastHashJoin"), p)
@@ -614,7 +614,7 @@ class PlanSpec extends SparkSpec {
     val partialFolds = "partial_collect_list".r.findAllIn(p).size
     assert(partialFolds >= 3,
       s"expected all three chunk levels to combine map-side, got $partialFolds\n$p")
-    Similarity.freeCheckpoint(cent)
+    Checkpoints.free(cent)
   }
 
   test("s07: the query plan reads the trained-codes checkpoint, nothing recomputes") {
@@ -1129,8 +1129,8 @@ class PlanSpec extends SparkSpec {
       case Some(v) => spark.conf.set("spark.graft.graph.broadcastNodes", v)
       case None => spark.conf.unset("spark.graft.graph.broadcastNodes")
     }
-    Similarity.freeCheckpoint(edges)
-    Similarity.freeCheckpoint(labels0)
+    Checkpoints.free(edges)
+    Checkpoints.free(labels0)
   }
 
   test("q84: wedges are enumerated by a ck-keyed join (never a " +
