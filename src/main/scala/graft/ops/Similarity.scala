@@ -742,7 +742,6 @@ object Similarity {
     }
   }
 
-
   /** DuckDB restatement of [[kcenterSeeds]]: the greedy recursion
     * unrolled as CTE rounds (c_r = argmax of s_{r-1}'s min-distance,
     * s_r = least-fold update), exactly the Spark arithmetic.
